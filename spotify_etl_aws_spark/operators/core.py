@@ -74,12 +74,15 @@ def fact_playlist_tracks(
     )
 
 
-def gold(stg: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    albums = dim_albums(stg["stg_albums"])
-    artists = dim_artists(stg["stg_artists"])
+def dims(stg: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return {
         "dim_playlists": dim_playlists(stg["stg_playlists"]),
-        "dim_albums": albums,
-        "dim_artists": artists,
-        "fact_playlist_tracks": fact_playlist_tracks(stg["stg_tracks"], albums, artists),
+        "dim_albums": dim_albums(stg["stg_albums"]),
+        "dim_artists": dim_artists(stg["stg_artists"]),
     }
+
+
+def gold(stg: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    d = dims(stg)
+    fact = fact_playlist_tracks(stg["stg_tracks"], d["dim_albums"], d["dim_artists"])
+    return {**d, "fact_playlist_tracks": fact}

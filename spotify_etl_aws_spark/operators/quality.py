@@ -88,8 +88,11 @@ def check_references(
     """Orphaned foreign-key values with row counts (dbt
     ``relationships``): every non-NULL child value must exist in the
     parent. Anti-join on the key — with a dim-sized parent the planner
-    broadcasts it."""
-    parent_keys = parent.select(F.col(parent_col).alias(col)).distinct()
+    broadcasts it. The parent keys are not de-duplicated first: a
+    left-anti join only tests whether a matching key exists, so a
+    repeated parent key can neither drop nor multiply a child row, and
+    a ``distinct()`` would only add an aggregate."""
+    parent_keys = parent.select(F.col(parent_col).alias(col))
     return (
         child.filter(F.col(col).isNotNull())
         .select(col)
@@ -100,23 +103,26 @@ def check_references(
 
 
 def expect_all(checks: dict[str, DataFrame]) -> dict[str, int]:
-    """Evaluate every named check in ONE Spark job (each check collapses
-    to a tagged one-row count and the rows union — not one action per
-    check, which would rescan the inputs N times); raise ONE error
-    naming each failed contract with its violation count. Returns the
-    per-check counts (all zero) when everything holds, so callers can
-    log a ledger."""
+    """Evaluate every named check in ONE Spark action: each check's
+    violation rows are tagged with the check's name, the tags union, and
+    one ``groupBy("check")`` counts them all — not one action per check,
+    which would rescan the inputs N times, nor one single-partition
+    aggregate per check (under AQE the action still runs one stage per
+    exchange). A check with no violation rows has no group and counts 0.
+    Raise ONE error naming each failed contract with its violation
+    count. Returns the per-check counts (all zero) when everything
+    holds, so callers can log a ledger."""
     from functools import reduce
 
-    tagged = [
-        df.agg(F.count(F.lit(1)).alias("n")).select(
-            F.lit(name).alias("check"), "n"
-        )
-        for name, df in checks.items()
-    ]
-    counts = {
-        r.check: r.n for r in reduce(DataFrame.unionAll, tagged).collect()
+    tagged = [df.select(F.lit(name).alias("check")) for name, df in checks.items()]
+    found = {
+        r.check: r.n
+        for r in reduce(DataFrame.unionAll, tagged)
+        .groupBy("check")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
     }
+    counts = {name: found.get(name, 0) for name in checks}
     failed = {name: n for name, n in counts.items() if n}
     if failed:
         detail = ", ".join(f"{name} ({n} violations)" for name, n in failed.items())

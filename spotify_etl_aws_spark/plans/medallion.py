@@ -13,22 +13,28 @@ Differences from the reference, on purpose:
   dbt_project.yml:41);
 - the fact is written partitioned by ``playlist_id`` so downstream
   per-playlist reads prune partitions at scale;
-- staging frames are cached: dims and the fact reuse them within the
-  run (the reference re-reads parquet per model).
+- the fact joins the dims as they landed, read back from gold like
+  dbt's ``ref()``, so the ``distinct()`` dims are computed once and no
+  staging frame is cached: each is read exactly once;
+- every read-back of a file the run just wrote declares its schema
+  (``schemas.BRONZE_TABLES`` for bronze, the written frame's schema for
+  silver and gold), so no read-back runs a footer-inference job.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
-from ..operators.core import gold
+from ..operators.core import dims, fact_playlist_tracks
 from ..operators.quality import (
     check_not_null,
     check_references,
@@ -37,8 +43,11 @@ from ..operators.quality import (
 )
 from ..operators.shred import shred
 from ..operators.staging import silver_projection, stage
+from ..schemas import BRONZE_TABLES
 from ..sources.readers import read_raw_playlists
 from ..sources.sinks import write_parquet, write_partitioned
+
+log = logging.getLogger(__name__)
 
 
 def run_with_retries(
@@ -55,19 +64,22 @@ def run_with_retries(
     ``delay_s``; stages here are idempotent (mode=overwrite parquet
     writes, dbt-style full rebuilds), so a re-run after a partial
     failure converges exactly like an Airflow task retry. ``sleeper``
-    is injectable for tests."""
-    import sys
-
+    is injectable for tests. Each retry logs one WARNING naming the
+    stage and the failed attempt."""
     for attempt in range(retries + 1):
         try:
             return fn()
         except Exception as exc:
             if attempt == retries:
                 raise
-            print(
-                f"stage {name}: attempt {attempt + 1}/{retries + 1} failed "
-                f"({type(exc).__name__}: {exc}); retrying in {delay_s}s",
-                file=sys.stderr,
+            log.warning(
+                "stage %s: attempt %d/%d failed (%s: %s); retrying in %ss",
+                name,
+                attempt + 1,
+                retries + 1,
+                type(exc).__name__,
+                exc,
+                delay_s,
             )
             sleeper(delay_s)
     raise AssertionError("unreachable")
@@ -114,12 +126,13 @@ def run_medallion(
     def _silver() -> dict[str, DataFrame]:
         silver = {}
         for name in bronze:
-            bdf = spark.read.parquet(os.path.join(out_root, "bronze", name))
-            sdf = silver_projection(bdf, name)
-            write_parquet(sdf, os.path.join(out_root, "silver", name))
-            silver[name] = spark.read.parquet(
-                os.path.join(out_root, "silver", name)
+            bdf = spark.read.schema(BRONZE_TABLES[name]).parquet(
+                os.path.join(out_root, "bronze", name)
             )
+            sdf = silver_projection(bdf, name)
+            path = os.path.join(out_root, "silver", name)
+            write_parquet(sdf, path)
+            silver[name] = spark.read.schema(sdf.schema).parquet(path)
         return silver
 
     silver = run_with_retries(
@@ -127,27 +140,35 @@ def run_medallion(
     )
 
     def _gold() -> dict[str, DataFrame]:
-        stg = {name: df.cache() for name, df in stage(silver).items()}
-        gold_frames = gold(stg)
-        for name, df in gold_frames.items():
+        stg = stage(silver)
+        landed = {}
+        for name, df in dims(stg).items():
             path = os.path.join(out_root, "gold", name)
-            if name == "fact_playlist_tracks":
-                write_partitioned(df, path, ["playlist_id"])
-            else:
-                write_parquet(df, path)
-        return gold_frames
+            write_parquet(df, path)
+            landed[name] = spark.read.schema(df.schema).parquet(path)
+        fact = fact_playlist_tracks(
+            stg["stg_tracks"], landed["dim_albums"], landed["dim_artists"]
+        )
+        path = os.path.join(out_root, "gold", "fact_playlist_tracks")
+        write_partitioned(fact, path, ["playlist_id"])
+        landed["fact_playlist_tracks"] = spark.read.schema(
+            _partition_last(fact.schema, "playlist_id")
+        ).parquet(path)
+        return landed
 
-    gold_frames = run_with_retries(
+    landed = run_with_retries(
         _gold, "gold", gold_retries, retry_delay_s, sleeper
     )
-
-    landed = {
-        name: spark.read.parquet(os.path.join(out_root, "gold", name))
-        for name in gold_frames
-    }
     if validate:
         expect_all(gold_contracts(landed))
     return landed
+
+
+def _partition_last(schema: StructType, col: str) -> StructType:
+    """The schema a ``partitionBy(col)`` write lands as: the partition
+    column moves from the files to the directory names, and a read
+    lists it after the data columns."""
+    return StructType([f for f in schema.fields if f.name != col] + [schema[col]])
 
 
 _DIM_KEYS = {

@@ -19,18 +19,25 @@ reference's own data:
 - tracks keep only the FIRST artist (bronze.py:146) while the artists
   table keeps all (bronze.py:186-192)
 - NULL-FK tracks silently drop out of the fact (inner join, not left)
+
+It also pins the build's cost shape: its Spark job count, an empty
+cache afterwards, and read-back schemas equal to what footer inference
+would give.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 import os
 
 import pytest
 from pyspark.sql import types as T
 
+from spotify_etl_aws_spark.operators.staging import silver_projection
 from spotify_etl_aws_spark.plans.medallion import run_medallion
+from spotify_etl_aws_spark.schemas import BRONZE_TABLES
 
 N_TRACKS = 50
 N_ALBUMS = 26
@@ -127,6 +134,53 @@ def test_golden_cardinalities(gold_frames, spark):
     assert gold["fact_playlist_tracks"].count() == N_TRACKS  # fact == tracks
 
 
+def test_read_back_schemas_match_inference(gold_frames, spark):
+    """The build reads back what it wrote with declared schemas instead
+    of inferring them from the files' footers. A declared schema that
+    drifts from the writer's would change what callers see, so each
+    must equal the inferred one: all four landed gold frames, the
+    bronze schema ``BRONZE_TABLES`` declares, and the silver schema the
+    runner takes from the written frame. The partitioned fact lands
+    with ``playlist_id`` last, as inference lists it."""
+    gold, lake = gold_frames
+    for name, df in gold.items():
+        assert df.schema == spark.read.parquet(os.path.join(lake, "gold", name)).schema, name
+    assert gold["fact_playlist_tracks"].columns[-1] == "playlist_id"
+
+    bronze = os.path.join(lake, "bronze", "tracks")
+    assert BRONZE_TABLES["tracks"] == spark.read.parquet(bronze).schema
+    declared = silver_projection(
+        spark.read.schema(BRONZE_TABLES["albums"]).parquet(
+            os.path.join(lake, "bronze", "albums")
+        ),
+        "albums",
+    ).schema
+    assert declared == spark.read.parquet(os.path.join(lake, "silver", "albums")).schema
+
+
+def test_build_job_count_and_no_cache_left(spark, tmp_path):
+    """Pin the build's Spark job budget with the gate off: 4 bronze
+    writes, 4 silver writes, and 8 gold jobs, in which the fact joins
+    the landed dims instead of recomputing their ``distinct()``. A
+    read-back that infers its schema adds one footer job per table, and
+    a cached staging frame adds its materialization, so either
+    regression moves the count. The build persists nothing: the session
+    is shared with other tests' cached frames, so the check is that no
+    RDD became persistent during the build, not an empty cache."""
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    sc = spark.sparkContext
+    persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "medallion-job-budget"
+    sc.setJobGroup(group, "pin: medallion build job count")
+    try:
+        run_medallion(spark, raw, str(tmp_path / "lake"), validate=False)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 16
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - persisted_before == set()
+
+
 def test_bronze_is_all_string(gold_frames, spark):
     _, lake = gold_frames
     for table in ["playlists", "tracks", "albums", "artists"]:
@@ -166,11 +220,12 @@ def test_boolean_roundtrip(gold_frames):
     assert explicit["T00"] is True and explicit["T01"] is False
 
 
-def test_retry_envelope_recovers_transient_stage_failure(spark, tmp_path):
+def test_retry_envelope_recovers_transient_stage_failure(spark, tmp_path, caplog):
     """Reference parity with the Airflow retry policy (retries=1 ingest,
     retries=2 gold, raw_dag.py:34-35 / gold_dag.py:9-10): a stage that
     fails transiently is re-run after the delay and the pipeline
-    completes; with retries exhausted the original error surfaces."""
+    completes; with retries exhausted the original error surfaces. Each
+    retry logs one WARNING naming the stage and the failed attempt."""
     from spotify_etl_aws_spark.plans.medallion import run_with_retries
 
     calls = {"n": 0}
@@ -182,11 +237,17 @@ def test_retry_envelope_recovers_transient_stage_failure(spark, tmp_path):
             raise OSError("transient")
         return "ok"
 
-    assert (
-        run_with_retries(flaky, "s", retries=2, delay_s=7.0, sleeper=slept.append)
-        == "ok"
-    )
+    with caplog.at_level(logging.WARNING, logger="spotify_etl_aws_spark.plans.medallion"):
+        assert (
+            run_with_retries(flaky, "s", retries=2, delay_s=7.0, sleeper=slept.append)
+            == "ok"
+        )
     assert calls["n"] == 3 and slept == [7.0, 7.0]
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert [r.getMessage().split(" failed")[0] for r in warnings] == [
+        "stage s: attempt 1/3",
+        "stage s: attempt 2/3",
+    ]
 
     calls["n"] = 0
     with pytest.raises(OSError, match="transient"):

@@ -65,6 +65,14 @@ def test_check_references_finds_orphans(spark):
     out = {r.fk: r.n_rows for r in check_references(child, "fk", parent, "pk").collect()}
     assert out == {3: 1}  # NULL FKs are not orphans (dbt relationships semantics)
 
+    # duplicate parent keys are not de-duplicated first: an anti-join
+    # only tests existence, so the repeated orphan is reported once with
+    # its full row count and the duplicated parent key drops no child row
+    child = spark.createDataFrame([(1,), (3,), (3,), (3,), (None,)], "fk bigint")
+    parent = spark.createDataFrame([(1,), (1,), (2,), (2,)], "pk bigint")
+    out = {r.fk: r.n_rows for r in check_references(child, "fk", parent, "pk").collect()}
+    assert out == {3: 3}
+
 
 def test_expect_all_raises_naming_every_failure(spark, dirty):
     # one violation row per duplicated key / per null-bearing column —
