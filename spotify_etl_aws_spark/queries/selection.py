@@ -901,9 +901,8 @@ def streaming_sketch_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_count_min_stream,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators.lineage import cut_lineage_eager
+    from ..session import run_concurrently
 
     # ONE events scan + ONE shuffle for BOTH offline denominators
     # (r15; guide §2.4): watchlist users keep their id, everything
@@ -930,18 +929,20 @@ def streaming_sketch_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the batch cell build is INDEPENDENT of the streaming sketch run
     # — overlap the two jobs (guide §2.6) instead of leaving the
     # cluster idle behind the stream's microbatch barrier
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        sketch_f = pool.submit(
-            run_available_now,
-            windowed_count_min_stream(
-                read_table_stream(spark, sf_dir, "events"),
-                "ts", "user_id", "1 hour", "1 hour", SK_DEPTH, SK_WIDTH,
+    sketch_stream = windowed_count_min_stream(
+        read_table_stream(spark, sf_dir, "events"),
+        "ts", "user_id", "1 hour", "1 hour", SK_DEPTH, SK_WIDTH,
+    )
+    sketch, cells = run_concurrently(
+        spark,
+        lambda run: run(),
+        [
+            lambda: run_available_now(
+                sketch_stream, "cm_sketch", output_mode="append"
             ),
-            "cm_sketch",
-            output_mode="append",
-        )
-        cells_f = pool.submit(cut_lineage_eager, cells_live)
-        sketch, cells = sketch_f.result(), cells_f.result()
+            lambda: cut_lineage_eager(cells_live),
+        ],
+    )
     keys = spark.createDataFrame(
         [(i,) for i in range(SK_USERS)], "user_id long"
     )

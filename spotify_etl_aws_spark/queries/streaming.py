@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from ..sources.readers import load_table as t
 from ..streaming.pipeline import read_table_stream, run_available_now
 from ..streaming.stateful import running_user_totals
@@ -56,19 +57,14 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # microbatch floor (~1 s at sf0.1; measured 2.4 -> 1.5 s
     # interleaved). Results are the same two materialized memory
     # tables; the union below is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        tumbling_f = pool.submit(
-            windowed, F.window("ts", "1 hour"), "windowed_counts", "tumbling"
-        )
-        sliding_f = pool.submit(
-            windowed,
-            F.window("ts", "1 hour", "30 minutes"),
-            "sliding_counts",
-            "sliding",
-        )
-        tumbling, sliding = tumbling_f.result(), sliding_f.result()
+    tumbling, sliding = run_concurrently(
+        spark,
+        lambda args: windowed(*args),
+        [
+            (F.window("ts", "1 hour"), "windowed_counts", "tumbling"),
+            (F.window("ts", "1 hour", "30 minutes"), "sliding_counts", "sliding"),
+        ],
+    )
     return tumbling.unionByName(sliding)
 
 

@@ -15,13 +15,23 @@ One place to encode the execution posture the whole engine assumes:
   VARCHAR->INT/BOOLEAN/DATE casts; with ANSI off Spark yields NULL on
   bad casts, which matches ``TRY_CAST`` oracle semantics
   (SURVEY.md §7 "cast semantics drift").
+
+``run_concurrently`` is the one way the engine submits independent
+Spark jobs from several driver threads at once.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
+R = TypeVar("R")
 
 DEFAULT_APP_NAME = "spotify_etl_aws_spark"
 
@@ -62,3 +72,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(
+    spark: SparkSession, fn: Callable[[T], R], items: Iterable[T]
+) -> list[R]:
+    """``[fn(item) for item in items]`` with the calls running on a pool
+    of one thread per item, at most 4: for independent per-table steps
+    whose Spark jobs are each too small to fill the executors, so that
+    they overlap instead of queueing.
+
+    Each call is wrapped with ``inheritable_thread_target(spark)`` when
+    it is submitted, so its jobs carry the caller's job group,
+    description and tags: a plain pool thread starts with none, and
+    ``getJobIdsForGroup`` / ``cancelJobGroup`` (which a streaming
+    query's ``stop()`` uses) would miss its jobs. Every call runs to the
+    end; then the first failure in input order is re-raised as it was
+    raised, and the results come back in input order."""
+    items = list(items)
+    with ThreadPoolExecutor(max_workers=max(1, min(4, len(items)))) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), item)
+            for item in items
+        ]
+    return [f.result() for f in futures]

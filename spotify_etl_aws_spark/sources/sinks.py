@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from ..operators.lineage import cut_lineage_eager
+from ..session import run_concurrently
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -64,9 +65,11 @@ def upsert_partitioned(
     2. tag target rows batch=0 and update rows batch=1, union, and
        keep ``row_number() over (partition by keys order by batch
        desc) = 1`` — update wins per key, untouched keys survive;
-    3. write with ``partitionOverwriteMode=dynamic`` so mode=overwrite
-       replaces only partitions present in the merged frame — every
-       other partition's files are untouched on disk.
+    3. write with the writer option ``partitionOverwriteMode=dynamic``
+       so mode=overwrite replaces only partitions present in the merged
+       frame — every other partition's files are untouched on disk.
+       The option is the write's own: the session config is not
+       touched, so concurrent writes in the session are unaffected.
 
     The merged frame is localCheckpoint-ed before the write: the
     output path is also the input path, and cutting lineage to the
@@ -93,12 +96,12 @@ def upsert_partitioned(
         .drop("__batch", "__rn")
         .transform(cut_lineage_eager)
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
 
 
 def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -653,9 +656,11 @@ def optimize_hilbert_incremental(
 
     # groups are independent (disjoint inputs, distinct output
     # prefixes): submit their Spark jobs concurrently
-    jobs = [(i, g, n_out) for i, (g, n_out) in enumerate(rewrite)]
-    with ThreadPoolExecutor(max_workers=min(4, len(jobs))) as ex:
-        list(ex.map(_rewrite_group, jobs))
+    run_concurrently(
+        spark,
+        _rewrite_group,
+        [(i, g, n_out) for i, (g, n_out) in enumerate(rewrite)],
+    )
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

@@ -21,6 +21,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import EVENTS_PARQUET_NANOS, TESTDATA_SCHEMAS
+from ..session import run_concurrently
 from ..sources.readers import (
     _events_ts,
     enable_nanos_as_long,
@@ -133,8 +134,15 @@ def incremental_bronze(
 ) -> None:
     """The reference's daily raw->bronze batch as an incremental stream:
     new raw playlist JSON files are shredded into the four bronze parquet
-    tables exactly once per file (replaces bronze_dag.py:78-98's
+    tables once per file (replaces bronze_dag.py:78-98's
     re-scan-and-INSERT loop).
+
+    Each micro-batch checks the four tables for drift and appends to
+    them concurrently (``session.run_concurrently``); a table that
+    fails does not stop the others, and the batch fails once all four
+    have finished. Once per file holds for batches that succeed: a
+    failed batch is not committed, so the next run replays it and the
+    tables that had already appended get its rows a second time.
     """
     from ..operators.shred import shred
     from ..schemas import RAW_PLAYLIST
@@ -153,7 +161,10 @@ def incremental_bronze(
             assert_no_breaking_drift,
         )
 
-        for table, df in shred(batch_df).items():
+        tables = shred(batch_df)
+
+        def append(table: str) -> None:
+            df = tables[table]
             path = f"{out_dir}/{table}"
             try:
                 landed_schema = batch_df.sparkSession.read.parquet(path).schema
@@ -171,6 +182,11 @@ def incremental_bronze(
                     _nullable_everywhere(df.schema),
                 )
             df.write.mode("append").parquet(path)
+
+        # the four tables are independent: check and append them
+        # concurrently. The pool threads inherit this callback's job
+        # group, so the query's stop() cancels their jobs too.
+        run_concurrently(batch_df.sparkSession, append, tables)
 
     q = (
         raw.writeStream.foreachBatch(write_batch)

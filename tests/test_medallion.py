@@ -20,9 +20,10 @@ reference's own data:
   table keeps all (bronze.py:186-192)
 - NULL-FK tracks silently drop out of the fact (inner join, not left)
 
-It also pins the build's cost shape: its Spark job count, an empty
-cache afterwards, and read-back schemas equal to what footer inference
-would give.
+It also pins the build's cost shape: its Spark job count and the
+refresh's, an empty cache afterwards, and read-back schemas equal to
+what footer inference would give; and ``session.run_concurrently``, the
+pool the build writes each layer's tables on.
 """
 
 from __future__ import annotations
@@ -181,6 +182,126 @@ def test_build_job_count_and_no_cache_left(spark, tmp_path):
     assert set(sc._jsc.getPersistentRDDs().keySet()) - persisted_before == set()
 
 
+def _refresh_updates(spark, raw: str):
+    """Gold-shaped update batches for every gold table, built from the
+    raw landing the way a daily refresh builds them from its delta."""
+    from spotify_etl_aws_spark.operators.core import gold
+    from spotify_etl_aws_spark.operators.shred import shred
+    from spotify_etl_aws_spark.operators.staging import stage
+    from spotify_etl_aws_spark.sources.readers import read_raw_playlists
+
+    bronze = shred(read_raw_playlists(spark, raw))
+    return gold(stage({t: silver_projection(df, t) for t, df in bronze.items()}))
+
+
+def test_refresh_job_count(spark, tmp_path):
+    """Pin the refresh's job budget: upserting all four gold tables of
+    the golden lake and re-running the contract gate submits 43 jobs,
+    the count of the one-table-at-a-time refresh. The four tables are
+    refreshed on pool threads; a thread that lost the caller's job
+    group would drop its jobs from the count, and concurrency must not
+    add a job either."""
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    lake = str(tmp_path / "lake")
+    run_medallion(spark, raw, lake, validate=False)
+    updates = _refresh_updates(spark, raw)
+    sc = spark.sparkContext
+    group = "refresh-job-budget"
+    sc.setJobGroup(group, "pin: gold refresh job count")
+    try:
+        landed = refresh_gold_incremental(spark, lake, updates)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(jobs) == 43
+    assert landed["fact_playlist_tracks"].count() == N_TRACKS
+
+
+def test_refresh_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """The fact upsert's dynamic partition overwrite is an option of its
+    own write. Setting ``partitionOverwriteMode`` on the session would
+    leak into writes running concurrently in other threads, and its
+    restore could race with theirs."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    lake = str(tmp_path / "lake")
+    run_medallion(spark, raw, lake, validate=False)
+    updates = _refresh_updates(spark, raw)
+    keys: list[str] = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    refresh_gold_incremental(spark, lake, updates)
+    assert not [k for k in keys if "partitionOverwriteMode" in k]
+
+
+def test_run_concurrently_keeps_job_group(spark):
+    """Jobs run by the pool threads belong to the caller's job group,
+    so ``getJobIdsForGroup`` counts them and ``cancelJobGroup`` reaches
+    them."""
+    from spotify_etl_aws_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    group = "run-concurrently-group"
+    sc.setJobGroup(group, "pooled jobs")
+    try:
+        sums = run_concurrently(
+            spark, lambda n: sc.parallelize(range(n), 2).sum(), [10, 20, 30, 40]
+        )
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert sums == [45, 190, 435, 780]
+    assert len(jobs) == 4
+
+
+def test_run_concurrently_returns_in_input_order(spark):
+    """Later items finish first; the results still follow the input."""
+    import time
+
+    from spotify_etl_aws_spark.session import run_concurrently
+
+    def slow(i: int) -> int:
+        time.sleep(0.05 * (6 - i))
+        return i * i
+
+    assert run_concurrently(spark, slow, range(6)) == [0, 1, 4, 9, 16, 25]
+    assert run_concurrently(spark, slow, []) == []
+
+
+def test_run_concurrently_raises_first_failure_after_all_finish(spark):
+    """Two items raise: the first in input order surfaces with its own
+    type, and only after every other item has finished."""
+    import time
+
+    from spotify_etl_aws_spark.session import run_concurrently
+
+    finished: list[int] = []
+
+    def step(i: int) -> int:
+        if i == 1:
+            time.sleep(0.2)
+            raise KeyError("first")
+        if i == 2:
+            raise ValueError("second")
+        time.sleep(0.4 if i == 3 else 0.0)
+        finished.append(i)
+        return i
+
+    with pytest.raises(KeyError, match="first"):
+        run_concurrently(spark, step, range(4))
+    assert sorted(finished) == [0, 3]
+
+
 def test_bronze_is_all_string(gold_frames, spark):
     _, lake = gold_frames
     for table in ["playlists", "tracks", "albums", "artists"]:
@@ -272,6 +393,41 @@ def test_retry_envelope_recovers_transient_stage_failure(spark, tmp_path, caplog
     finally:
         M.write_partitioned = real_write
     assert gold["fact_playlist_tracks"].count() == N_TRACKS
+
+    # one silver table's write fails once while its siblings land on
+    # other pool threads: the silver layer is retried as a whole and
+    # the lake equals a clean build's
+    real_parquet = M.write_parquet
+
+    def flaky_silver(df, path):
+        if boom["armed"] and path.endswith(os.path.join("silver", "albums")):
+            boom["armed"] = False
+            raise OSError("transient silver write")
+        return real_parquet(df, path)
+
+    M.write_parquet = flaky_silver
+    try:
+        boom["armed"] = True
+        run_medallion(spark, raw, str(tmp_path / "retried"))
+        assert not boom["armed"]
+        boom["armed"] = True
+        with pytest.raises(OSError, match="transient silver write"):
+            run_medallion(spark, raw, str(tmp_path / "failed"), retries=0)
+    finally:
+        M.write_parquet = real_parquet
+    run_medallion(spark, raw, str(tmp_path / "clean"), validate=False)
+
+    def rows(root: str, table: str):
+        df = spark.read.parquet(os.path.join(tmp_path, root, table))
+        return df.columns, sorted(df.collect(), key=repr)
+
+    gold_tables = ["dim_playlists", "dim_albums", "dim_artists", "fact_playlist_tracks"]
+    for table in (
+        [f"bronze/{t}" for t in BRONZE_TABLES]
+        + [f"silver/{t}" for t in BRONZE_TABLES]
+        + [f"gold/{t}" for t in gold_tables]
+    ):
+        assert rows("retried", table) == rows("clean", table), table
 
 
 def test_encoding_sniff_reads_latin1_fixture(spark, tmp_path):
