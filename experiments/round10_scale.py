@@ -76,8 +76,8 @@ def probe_pq() -> None:
     import pyspark.sql.functions as F
 
     from spotify_etl_aws_spark.operators.pq import encode_pq, fit_pq, pq_topk
-    from spotify_etl_aws_spark.queries.selection import (
-        ORACLE_PQ_ADC,
+    from spotify_etl_aws_spark.queries.selection import ORACLE_PQ_ADC
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         PQ_DECIMALS,
         PQ_ITERS,
         PQ_K,
@@ -154,11 +154,13 @@ def probe_phon() -> None:
     from spotify_etl_aws_spark.operators.linkage import block_census, fs_link
     from spotify_etl_aws_spark.queries.selection import (
         ORACLE_PHON_LINK,
+        link_part_phonetic,
+    )
+    from spotify_etl_aws_spark.queries.lanes_linkage import (
         PHON_FS_THRESHOLD,
         _phon_blocking,
         _phon_comparators,
         _phon_frames,
-        link_part_phonetic,
     )
 
     spark = _spark()
@@ -204,7 +206,10 @@ def probe_phon() -> None:
 
 def probe_kcenter() -> None:
     from spotify_etl_aws_spark.operators.coreset import kcenter_select
-    from spotify_etl_aws_spark.queries.selection import KC_DECIMALS, KC_K
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
+        KC_DECIMALS,
+        KC_K,
+    )
 
     spark = _spark()
     path, n = amplify("embeddings", "vec_id", 100, OUT)
@@ -240,7 +245,7 @@ def probe_kcenter() -> None:
 
 def probe_mmr() -> None:
     from spotify_etl_aws_spark.operators.coreset import mmr_select
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         KC_DECIMALS,
         MMR_K,
         MMR_LAM,

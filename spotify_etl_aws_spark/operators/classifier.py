@@ -18,10 +18,9 @@ move. Scoring is one map-side pandas kernel (the model rides the
 closure), composable as a curation-ladder gate.
 
 Featurization runs INSIDE the kernels (blake2b bucket + sign hash,
-unit L2) so training and scoring are self-consistent by construction;
-``operators/feature_hash.py`` remains the JVM featurizer for the
-vector lanes — this one trades JVM execution for closure-portability,
-which is what a 20-line numpy gradient needs.
+unit L2) so training and scoring are self-consistent by construction.
+It trades JVM execution for closure-portability, which is what a
+20-line numpy gradient needs.
 """
 
 from __future__ import annotations

@@ -4,11 +4,13 @@
 Web-corpus curation ranks hosts/URLs by link authority before anything
 touches page text — CommonCrawl publishes harmonic/PageRank host ranks
 for exactly this, and the open curation pipelines (CCNet-class) use
-them as a crawl-seed and quality prior next to the per-domain caps in
-``operators/urls.py``. The reference engine has no graph surface at
-all (its SQL never leaves scan/join/agg); this lane is part of the
-beyond-reference training-data inventory, the iterative-algorithm twin
-of connected components (`operators/dedup.py:connected_components`).
+them as a crawl-seed and quality prior next to per-domain caps. The
+declared query is ``graph_pagerank`` (``queries/lanes_graph_events.py``)
+over the supplier→customer fulfillment graph. The reference engine has
+no graph surface at all (its SQL never leaves scan/join/agg); this lane
+is part of the beyond-reference training-data inventory, the
+iterative-algorithm twin of connected components
+(`operators/dedup.py:connected_components`).
 
 Formulation (Page et al. 1999, the dangling-mass variant): with
 damping d and n nodes,

@@ -387,7 +387,7 @@ def bloom_prefilter_antijoin(
     Bloom misses are certain — the filter only ever ROUTES rows.
 
     The incremental-ingest shape (`plans/curation.py` cross-batch
-    stores, `sources/warc.py` crawl dedup): ``seen`` is an epoch's
+    stores): ``seen`` is an epoch's
     key set whose word table was persisted once; each new batch scans
     its own keys map-side against the broadcast words, and the exact
     join's input shrinks from |new| to |overlap| + fpp·|new| — at web

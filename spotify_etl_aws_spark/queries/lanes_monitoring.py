@@ -1,8 +1,8 @@
 """Monitoring / stats / data-quality / privacy lanes — split out of queries/selection.py in round 12
 (verdict item 5). The registry (selection.QUERIES / selection.ORACLE)
-and the driver's query ordering are unchanged: selection re-exports
-every name defined here, so ``queries.selection.<name>`` keeps
-resolving for tests, experiments and tools. Lane bodies are moved
+and its query order are unchanged: selection imports only the query
+functions and oracles it registers, so import every other name from
+this module. Lane bodies are moved
 VERBATIM — the full-sweep manifest gate pins value-hash equality."""
 
 from __future__ import annotations

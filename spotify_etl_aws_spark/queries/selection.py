@@ -37,12 +37,10 @@ from ..operators.substring_dedup import dedup_substrings
 from ..sources.readers import load_table as t
 from .vector import _embeddings, _query_vector
 
-# ---- round-12 split: lane families moved to per-family modules ----
-# (verdict item 5; every moved name re-exported so queries.selection.<name>
-# keeps working for tests, experiments and tools)
-from .lanes_graph_events import (  # noqa: F401 — re-exports, see lanes_graph_events
-    FUNNEL_STEPS,
-    RETENTION_PERIOD_DAYS,
+# ---- lane families that live in per-family modules ----
+# Only the query functions and oracles the registry below names are
+# imported here; import anything else from its lanes_* module.
+from .lanes_graph_events import (
     events_funnel,
     ORACLE_FUNNEL,
     events_retention,
@@ -53,58 +51,37 @@ from .lanes_graph_events import (  # noqa: F401 — re-exports, see lanes_graph_
     ORACLE_UNPIVOT,
     graph_bfs_levels,
     ORACLE_BFS_LEVELS,
-    PPR_ITERATIONS,
-    PPR_DAMPING,
-    PPR_DECIMALS,
     graph_ppr_weighted,
     _oracle_ppr_weighted,
-    PR_ITERATIONS,
-    PR_DAMPING,
-    PR_DECIMALS,
     graph_pagerank,
     _oracle_pagerank,
 )
-from .lanes_temporal import (  # noqa: F401 — re-exports, see lanes_temporal
+from .lanes_temporal import (
     dim_scd2_history,
     ORACLE_SCD2,
     cdc_latest_snapshot,
     ORACLE_CDC,
-    IVL_BIN_DAYS,
-    IVL_EPOCH,
     join_interval_overlap,
     ORACLE_IVL_OVERLAP,
-    RANGE_WINDOW_DAYS,
     window_time_range_agg,
     ORACLE_RANGE_WINDOW,
-    DIFF_REMOVE_MOD,
-    DIFF_CHANGE_MOD,
     dim_snapshot_diff,
     ORACLE_SNAPSHOT_DIFF,
-    SESSION_WINDOW_GAP_MIN,
     agg_session_window,
     ORACLE_SESSION_WINDOW,
     streaming_cdc_upsert,
     join_asof_forward,
     ORACLE_ASOF_FORWARD,
-    ASOF_LOOKBACK_DAYS,
     dim_scd2_asof_lookup,
     ORACLE_SCD2_ASOF,
-    SKEW_SALT,
     join_skew_salted,
     ORACLE_SKEW_SALTED,
 )
-from .lanes_layout import (  # noqa: F401 — re-exports, see lanes_layout
-    ZORDER_BITS,
+from .lanes_layout import (
     layout_zorder_keys,
     ORACLE_ZORDER,
-    HILBERT_BITS,
     layout_hilbert_keys,
-    _hilbert_oracle,
     ORACLE_HILBERT,
-    MINE_MINSUP,
-    MINE_MAX_BASKET_ITEMS,
-    _basket_frame,
-    _mine_pairs,
     mine_frequent_pairs,
     mine_basket_census,
     mine_frequent_pairs_capped,
@@ -126,163 +103,86 @@ from .lanes_layout import (  # noqa: F401 — re-exports, see lanes_layout
     ORACLE_CLOSED_PAIRS,
     ORACLE_RULE_INTEREST,
 )
-from .lanes_seqsim import (  # noqa: F401 — re-exports, see lanes_seqsim
-    EDITDIST_D,
-    EDITDIST_TITLE_LEN,
+from .lanes_seqsim import (
     dedup_editdistance_pairs,
     ORACLE_EDITDIST,
-    DTW_K,
     ts_dtw_topk_similarity,
-    _DTW_INF,
     ORACLE_DTW,
-    DTW_BAND,
     ts_dtw_banded_topk,
-    _DTW_CELL_INF,
     ORACLE_DTW_BANDED,
     dedup_editdistance_lookup,
     ORACLE_EDITDIST_LOOKUP,
     dedup_editdistance_collapsed,
 )
-from .lanes_media import (  # noqa: F401 — re-exports, see lanes_media
-    PHASH_GROUP,
-    PHASH_MAXDIST,
-    _PHASH_MIX_SQL,
-    _phash_cells,
+from .lanes_media import (
     dedup_image_phash,
     ORACLE_IMAGE_PHASH,
-    AFP_GROUP,
-    AFP_MAXDIST,
-    AFP_BLOCK_SAMPLES,
-    _afp_amplitudes,
     dedup_audio_fingerprint,
     dedup_image_phash_resized,
-    VIDEO_FRAMES,
-    VIDEO_MIN_FRAMES,
-    VIDEO_FRAME_DIST,
-    _video_levels,
     dedup_video_clips,
-    _VID_FLIPS,
     ORACLE_VIDEO_CLIPS,
-    PHASH_WIDE_MAXDIST,
-    _phash_wide_cells,
     dedup_image_phash_wide,
     dedup_image_phash_wide_bloom,
-    _WIDE_FLIPS,
     ORACLE_IMAGE_PHASH_WIDE,
     ORACLE_AUDIO_FP,
 )
-from .lanes_linkage import (  # noqa: F401 — re-exports, see lanes_linkage
-    FS_THRESHOLD,
-    _fs_frames,
-    _FS_HAND_WEIGHTS,
-    _fs_blocking,
-    _fs_comparators,
+from .lanes_linkage import (
     link_customer_records,
-    _FS_BASE_CTES,
     ORACLE_FS_LINK,
     link_customer_best,
     ORACLE_FS_BEST,
-    FS_CLERICAL_LOW,
     link_clerical_bands,
     link_band_purity,
-    _FS_SCORED_HEAD,
     ORACLE_FS_BANDS,
     ORACLE_BAND_PURITY,
-    EM_FIELDS,
-    EM_ITERS,
-    EM_DECIMALS,
-    EM_SCALE,
-    _fs_learned_int_weights,
     link_customer_learned,
-    _oracle_fs_learned,
     ORACLE_FS_LEARNED,
-    JW_THRESHOLD,
     link_customer_jw,
     ORACLE_FS_JW,
-    PHON_FS_THRESHOLD,
-    _PHON_FS_WEIGHTS,
-    _phon_frames,
-    _phon_blocking,
-    _phon_comparators,
     link_part_phonetic,
-    _phon_oracle,
     ORACLE_PHON_LINK,
-    PHON_BLOCK_CAP,
     link_part_phonetic_capped,
     ORACLE_PHON_LINK_CAPPED,
     link_block_census,
-    _census_oracle,
     ORACLE_BLOCK_CENSUS,
-    PHON_TF_THRESHOLD,
-    PHON_TF_SCALE,
     link_part_phonetic_tf,
-    _phon_tf_oracle,
     ORACLE_PHON_TF,
     link_eval_metrics,
     ORACLE_LINK_EVAL,
-    LINK_PROBE_OFFSET,
-    _assert_probe_offset_disjoint,
     link_entity_clusters,
-    _ENTITY_CTES,
     ORACLE_ENTITY_CLUSTERS,
     link_entity_golden,
     ORACLE_ENTITY_GOLDEN,
     dq_pseudonymize,
     ORACLE_PSEUDONYMIZE,
 )
-from .lanes_vector_select import (  # noqa: F401 — re-exports, see lanes_vector_select
-    PQ_M,
-    PQ_K,
-    PQ_ITERS,
-    PQ_SAMPLE_N,
-    PQ_DECIMALS,
-    PQ_TOPK,
-    _pq_model,
+from .lanes_vector_select import (
     vector_pq_adc_topk,
-    _pq_oracle,
     ORACLE_PQ_ADC,
-    KC_K,
-    KC_DECIMALS,
     select_kcenter_coreset,
-    _kcenter_oracle,
     ORACLE_KCENTER,
-    MMR_K,
-    MMR_LAM,
-    MMR_MU,
     search_mmr_rerank,
-    _mmr_oracle,
     ORACLE_MMR,
     dedup_semantic_prune,
     ORACLE_SEMDEDUP,
     vector_ivf_recall,
     ORACLE_IVF_RECALL,
-    NPROBE_TIERS,
     vector_ivf_recall_curve,
     ORACLE_IVF_RECALL_CURVE,
     vector_pq_recall,
     ORACLE_PQ_RECALL,
-    IVFPQ_NPROBE,
-    _ivfpq_model,
     vector_ivfpq_topk,
     ORACLE_IVFPQ_TOPK,
     vector_ivfpq_recall,
     ORACLE_IVFPQ_RECALL,
 )
-from .lanes_monitoring import (  # noqa: F401 — re-exports, see lanes_monitoring
-    MAD_K,
-    MAD_MIN_GROUP,
+from .lanes_monitoring import (
     stats_mad_outliers,
     ORACLE_MAD_OUTLIERS,
-    MAD_APPROX_ACC,
     stats_mad_approx_contract,
     ORACLE_MAD_APPROX,
-    EWMA_WINDOW,
     ts_ewma_dyadic,
-    _ewma_oracle,
     ORACLE_EWMA,
-    PSI_CUTOFF,
-    PSI_BINS,
-    PSI_BIN_CENTS,
     stats_psi_drift,
     ORACLE_PSI,
     streaming_psi_drift,
@@ -290,46 +190,28 @@ from .lanes_monitoring import (  # noqa: F401 — re-exports, see lanes_monitori
     streaming_cusum_watermarked,
     streaming_cusum_dead_letters,
     ORACLE_CUSUM_DEAD_LETTERS,
-    PSIQ_ACC,
-    PSIQ_DECILES,
     stats_psi_quantile_contract,
     ORACLE_PSI_QUANTILE,
-    EWMA_SPIKE_LIMIT,
     ts_ewma_spikes,
-    _ewma_spike_oracle,
     ORACLE_EWMA_SPIKES,
-    CUSUM_REF,
-    CUSUM_H,
     ts_cusum_alarms,
     ORACLE_CUSUM,
     stats_group_ols_trend,
     ORACLE_OLS,
-    OLS_RESID_LIMIT,
     stats_ols_outliers,
     ORACLE_OLS_OUTLIERS,
     stats_ks_drift,
     ORACLE_KS,
-    DQ_STATUS_DOMAIN,
     dq_expectations,
-    _DQ_STATUS_SQL,
     ORACLE_DQ,
-    DQM_MIN_PCT,
-    DQM_MAX_PCT,
     dq_metric_anomalies,
     ORACLE_DQ_ANOMALIES,
-    KANON_K,
-    KANON_BAND_CENTS,
     dq_k_anonymity,
     ORACLE_KANON,
-    KANON_L,
     dq_l_diversity,
     ORACLE_LDIV,
-    PROFILE_COLS,
     stats_column_profile,
     ORACLE_PROFILE,
-    PROFILE_NUM_CARRIERS,
-    PROFILE_HLL_RSD,
-    PROFILE_HLL_BOUND,
     stats_profile_numeric,
     ORACLE_PROFILE_NUMERIC,
     stats_profile_hll_contract,

@@ -113,8 +113,11 @@ def widen_if_starved(df: DataFrame) -> DataFrame:
     groups and gets its parallelism from the scan itself; in that case
     this is a no-op and the plan carries NO added Exchange (the r14
     unconditional form would have re-shuffled 100 TB for nothing).
-    The partition-count probe is driver-side physical planning only —
-    no job runs.
+    For a scan-and-project frame the partition-count probe only plans
+    the query, and no job runs. A frame with a shuffle is different:
+    under AQE, ``df.rdd`` runs its shuffle stages to learn the
+    partition count. Both callers pass scan-and-project frames
+    (``queries/text.py`` and ``queries/lanes_temporal.py``).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -71,11 +71,11 @@ def upsert_partitioned(
        The option is the write's own: the session config is not
        touched, so concurrent writes in the session are unaffected.
 
-    The merged frame is localCheckpoint-ed before the write: the
-    output path is also the input path, and cutting lineage to the
-    file source is what makes the self-overwrite safe (the standard
-    plain-parquet pattern; a Delta/Iceberg MERGE replaces this whole
-    function when a table format is available)."""
+    The output path is also the input path, and no lineage cut is
+    needed for that: a dynamic-overwrite write stages its output and
+    swaps the partitions in only at job commit, after every task that
+    reads the target has finished. (A Delta/Iceberg MERGE replaces this
+    whole function when a table format is available.)"""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -94,7 +94,6 @@ def upsert_partitioned(
         )
         .filter(F.col("__rn") == 1)
         .drop("__batch", "__rn")
-        .transform(cut_lineage_eager)
     )
     (
         merged.write.mode("overwrite")
@@ -108,7 +107,12 @@ def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
     """Key-window upsert for small unpartitioned tables (gold dims):
     same latest-version-per-key merge, full-file rewrite — a dim is
     broadcast-scale by definition, so rewriting it is cheaper than
-    maintaining partitions on it."""
+    maintaining partitions on it.
+
+    Unlike ``upsert_partitioned``, the merged frame is localCheckpoint-ed
+    before the write. A static overwrite deletes the path it reads
+    before its tasks run, so without the cut the write fails with
+    ``FAILED_READ_FILE.FILE_NOT_EXIST``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

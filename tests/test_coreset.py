@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spotify_etl_aws_spark.operators.coreset import kcenter_select
-from spotify_etl_aws_spark.queries.selection import KC_DECIMALS, KC_K
+from spotify_etl_aws_spark.queries.lanes_vector_select import KC_DECIMALS, KC_K
 from spotify_etl_aws_spark.sources.readers import load_table
 
 
@@ -206,12 +206,12 @@ def _mmr_replay(ids, ux, q, k, lam, mu, decimals):
 
 
 def test_mmr_matches_replay_and_margins(spark, sf_dir, corpus):
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         MMR_K,
         MMR_LAM,
         MMR_MU,
-        search_mmr_rerank,
     )
+    from spotify_etl_aws_spark.queries.selection import search_mmr_rerank
     from spotify_etl_aws_spark.queries.vector import QUERY_VEC_ID
 
     ids, ux = corpus
@@ -236,7 +236,7 @@ def test_mmr_diversifies_vs_pure_relevance(corpus):
     pairwise cosine) is no worse than pure relevance top-k, while the
     seed is exactly the relevance argmax — the operator's contract."""
     from spotify_etl_aws_spark.operators.coreset import mmr_select  # noqa: F401
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         MMR_K,
         MMR_LAM,
         MMR_MU,

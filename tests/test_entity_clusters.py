@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from spotify_etl_aws_spark.queries.lanes_linkage import LINK_PROBE_OFFSET
 from spotify_etl_aws_spark.queries.selection import (
-    LINK_PROBE_OFFSET,
     link_customer_records,
     link_entity_clusters,
 )
@@ -95,7 +95,7 @@ def test_probe_offset_guard_raises_on_keyspace_collision(spark):
     """If the master keyspace reaches LINK_PROBE_OFFSET the lane must
     raise instead of silently merging colliding node ids (round-10
     ADVICE item 1: TPC-H custkey = 150000*SF crosses 1M at SF~6.7)."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_linkage import (
         _assert_probe_offset_disjoint,
     )
 
@@ -143,10 +143,8 @@ def test_golden_records_semantics(spark, sf_dir, clusters):
 def test_golden_attrs_are_source_rows(spark, sf_dir):
     """The canonical attributes are copied verbatim from the picked
     source node's record — never mixed across members."""
-    from spotify_etl_aws_spark.queries.selection import (
-        _fs_frames,
-        link_entity_golden,
-    )
+    from spotify_etl_aws_spark.queries.lanes_linkage import _fs_frames
+    from spotify_etl_aws_spark.queries.selection import link_entity_golden
 
     probe, master = _fs_frames(spark, sf_dir)
     m_attrs = {

@@ -292,45 +292,6 @@ def test_misra_gries_bounds_any_stream(stream, capacity):
             assert true[k] <= dec
 
 
-# The crawl lane's never-crash contract: every HTML extractor must
-# accept ARBITRARY bytes (real crawls contain truncated tags, stray
-# quotes, non-UTF-8 runs) — a malformed page may yield empty output but
-# never an exception, and html_links must return deduplicated
-# non-empty strings whatever the soup looks like.
-@settings(max_examples=100, deadline=None)
-@given(payload=st.binary(max_size=400))
-def test_html_extractors_total_on_arbitrary_bytes(payload):
-    from spotify_etl_aws_spark.sources.warc import (
-        html_blocks,
-        html_links,
-        html_main_text,
-        html_text,
-    )
-
-    assert isinstance(html_text(payload), str)
-    assert isinstance(html_main_text(payload), str)
-    for text, density in html_blocks(payload):
-        assert text and 0.0 <= density <= 1.0
-    links = html_links(payload)
-    assert len(links) == len(set(links))
-    assert all(isinstance(x, str) and x for x in links)
-
-
-# Same contract one layer down: the lenient WARC record walk consumes
-# arbitrary bytes without raising, never yields a body longer than the
-# stream, and counts (rather than throws) framing damage.
-@settings(max_examples=100, deadline=None)
-@given(data=st.binary(max_size=600))
-def test_lenient_warc_walk_total_on_arbitrary_bytes(data):
-    from spotify_etl_aws_spark.sources.warc import iter_warc_records
-
-    stats: dict[str, int] = {}
-    for headers, body in iter_warc_records(data, strict=False, stats=stats):
-        assert headers["WARC-Version"].startswith("WARC/")
-        assert len(body) <= len(data)
-    assert stats.get("bad_records", 0) >= 0
-
-
 # DTW (operators/dtw.py): endpoint cells are on every warping path, so
 # their costs lower-bound the distance; for equal-length series the
 # diagonal path upper-bounds it by pointwise L1. Both must hold for

@@ -40,7 +40,7 @@ def cents(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def model(spark, sf_dir):
-    from spotify_etl_aws_spark.queries.selection import _ivfpq_model
+    from spotify_etl_aws_spark.queries.lanes_vector_select import _ivfpq_model
 
     return _ivfpq_model(spark, sf_dir)
 
@@ -58,7 +58,7 @@ def _corpus_residuals(emb, cents):
 
 
 def test_fit_deterministic_and_shaped(spark, sf_dir, emb, cents, model):
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         PQ_DECIMALS,
         PQ_ITERS,
         PQ_K,
@@ -138,7 +138,7 @@ def test_fit_and_encode_margins(spark, sf_dir, emb, cents, model):
     4dp rounding-grid margin. Drift is ~1e-15 relative, so >= 1e-9
     (or 1e-6 in grid units) can never flip the hash."""
     from spotify_etl_aws_spark.operators.pq import _round_away
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         IVFPQ_NPROBE,
         PQ_DECIMALS,
         PQ_ITERS,
@@ -228,8 +228,8 @@ def test_recall_bounded_by_ivf_probe(spark, sf_dir):
     can hit at most |global_topk INTERSECT probed| — exactly the IVF
     probe's hit count at the same nprobe. IVFADC adds quantization
     error on top, so n_hits(ivfpq) <= n_hits(ivf@nprobe)."""
+    from spotify_etl_aws_spark.queries.lanes_vector_select import IVFPQ_NPROBE
     from spotify_etl_aws_spark.queries.selection import (
-        IVFPQ_NPROBE,
         vector_ivf_recall_curve,
         vector_ivfpq_recall,
     )
@@ -249,13 +249,11 @@ def test_lane_prunes_partitions_and_reads_codes_only(spark, sf_dir):
     ship only (vec_id, code) — m bytes/row, never the vectors."""
     import os
 
-    from spotify_etl_aws_spark.queries.selection import (
-        IVFPQ_NPROBE,
-        vector_ivfpq_topk,
-    )
     from spotify_etl_aws_spark.queries.lanes_vector_select import (
+        IVFPQ_NPROBE,
         _ivfpq_index_path,
     )
+    from spotify_etl_aws_spark.queries.selection import vector_ivfpq_topk
 
     plan = (
         vector_ivfpq_topk(spark, sf_dir)

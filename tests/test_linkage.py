@@ -345,9 +345,11 @@ def test_clerical_bands_partition_and_purity(spark, sf_dir):
     declared linkage output, the clerical band fills
     [FS_CLERICAL_LOW, FS_THRESHOLD), both bands are non-empty, and
     purity rows reproduce the banded counts."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_linkage import (
         FS_CLERICAL_LOW,
         FS_THRESHOLD,
+    )
+    from spotify_etl_aws_spark.queries.selection import (
         link_band_purity,
         link_clerical_bands,
         link_customer_records,

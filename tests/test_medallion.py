@@ -196,8 +196,9 @@ def _refresh_updates(spark, raw: str):
 
 def test_refresh_job_count(spark, tmp_path):
     """Pin the refresh's job budget: upserting all four gold tables of
-    the golden lake and re-running the contract gate submits 43 jobs,
-    the count of the one-table-at-a-time refresh. The four tables are
+    the golden lake and re-running the contract gate submits 42 jobs:
+    the count of the one-table-at-a-time refresh, less the lineage cut
+    the fact's dynamic-overwrite upsert no longer pays. The four tables are
     refreshed on pool threads; a thread that lost the caller's job
     group would drop its jobs from the count, and concurrency must not
     add a job either."""
@@ -215,7 +216,7 @@ def test_refresh_job_count(spark, tmp_path):
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
-    assert len(jobs) == 43
+    assert len(jobs) == 42
     assert landed["fact_playlist_tracks"].count() == N_TRACKS
 
 

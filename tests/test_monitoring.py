@@ -9,8 +9,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from spotify_etl_aws_spark.queries.lanes_monitoring import PSI_CUTOFF
 from spotify_etl_aws_spark.queries.selection import (
-    PSI_CUTOFF,
     dq_expectations,
     stats_ks_drift,
 )
@@ -170,11 +170,11 @@ def test_ols_matches_numpy(spark, sf_dir):
 def test_ewma_spikes_brute_force(spark, sf_dir):
     """Spike set equals a brute-force python replay of the dyadic EWMA
     control chart (forecast = previous row's EWMA, |dev| > limit)."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_monitoring import (
         EWMA_SPIKE_LIMIT,
         EWMA_WINDOW,
-        ts_ewma_spikes,
     )
+    from spotify_etl_aws_spark.queries.selection import ts_ewma_spikes
 
     ev = sorted(
         load_table(spark, sf_dir, "events").select(
@@ -226,11 +226,11 @@ def test_cusum_matches_sequential_recurrence(spark, sf_dir):
     """The window form P_t - min(0, min P_j) equals Page's sequential
     recurrence S_t = max(0, S_{t-1} + y_t) replayed in python —
     integer-exact, alarm set identical."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_monitoring import (
         CUSUM_H,
         CUSUM_REF,
-        ts_cusum_alarms,
     )
+    from spotify_etl_aws_spark.queries.selection import ts_cusum_alarms
 
     ev = sorted(
         load_table(spark, sf_dir, "events").select(
@@ -272,11 +272,11 @@ def test_k_anonymity_census(spark, sf_dir):
     """Census partitions the table; at_risk groups exist at this SF;
     negative balances band by FLOOR (the Spark-div/DuckDB-// trap the
     lane makes explicit)."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_monitoring import (
         KANON_BAND_CENTS,
         KANON_K,
-        dq_k_anonymity,
     )
+    from spotify_etl_aws_spark.queries.selection import dq_k_anonymity
 
     rows = dq_k_anonymity(spark, sf_dir).collect()
     n_cust = load_table(spark, sf_dir, "customer").count()
@@ -294,10 +294,8 @@ def test_k_anonymity_census(spark, sf_dir):
 
 
 def test_l_diversity_census(spark, sf_dir):
-    from spotify_etl_aws_spark.queries.selection import (
-        KANON_L,
-        dq_l_diversity,
-    )
+    from spotify_etl_aws_spark.queries.lanes_monitoring import KANON_L
+    from spotify_etl_aws_spark.queries.selection import dq_l_diversity
 
     rows = dq_l_diversity(spark, sf_dir).collect()
     assert sum(r.n for r in rows) == load_table(
@@ -332,10 +330,8 @@ def test_frequent_pairs_brute_force(spark, sf_dir):
     pass over the distinct baskets."""
     from collections import Counter
 
-    from spotify_etl_aws_spark.queries.selection import (
-        MINE_MINSUP,
-        mine_frequent_pairs,
-    )
+    from spotify_etl_aws_spark.queries.lanes_layout import MINE_MINSUP
+    from spotify_etl_aws_spark.queries.selection import mine_frequent_pairs
 
     baskets = {}
     for r in (
@@ -372,8 +368,8 @@ def test_ols_outliers_scoring(spark, sf_dir):
     """Every flagged order's residual recomputes exactly from the
     model lane's slope/intercept, and no unflagged order exceeds the
     limit (completeness checked by brute force)."""
+    from spotify_etl_aws_spark.queries.lanes_monitoring import OLS_RESID_LIMIT
     from spotify_etl_aws_spark.queries.selection import (
-        OLS_RESID_LIMIT,
         stats_group_ols_trend,
         stats_ols_outliers,
     )
@@ -432,8 +428,10 @@ def test_frequent_pairs_capped_strict_subset(spark, sf_dir):
     capped lane (part_a, part_b) set is a subset of the uncapped
     lane, support never increases, and the valve BITES at this SF
     (census shows baskets above MINE_MAX_BASKET_ITEMS)."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_layout import (
         MINE_MAX_BASKET_ITEMS,
+    )
+    from spotify_etl_aws_spark.queries.selection import (
         mine_basket_census,
         mine_frequent_pairs,
         mine_frequent_pairs_capped,
@@ -462,11 +460,11 @@ def test_dq_metric_anomalies_semantics(spark, sf_dir):
     """Deequ rate-of-change gate: the first epoch never alarms, flags
     match the integer cross-multiplication band exactly, and the lane
     is non-vacuous (TPC-H's partial final month trips the band)."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_monitoring import (
         DQM_MAX_PCT,
         DQM_MIN_PCT,
-        dq_metric_anomalies,
     )
+    from spotify_etl_aws_spark.queries.selection import dq_metric_anomalies
 
     rows = dq_metric_anomalies(spark, sf_dir).collect()
     by_metric = {}

@@ -1,10 +1,8 @@
-"""Training order (operators/ordering.py) and the corpus data card
-(operators/stats.py): determinism, growth stability, round-robin
-interleave balance, and hand-checked card values."""
+"""Training order (operators/ordering.py): determinism, growth
+stability, shard write order and round-robin interleave balance."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from spotify_etl_aws_spark.operators.ordering import (
@@ -12,7 +10,6 @@ from spotify_etl_aws_spark.operators.ordering import (
     training_order,
     write_training_shards,
 )
-from spotify_etl_aws_spark.operators.stats import corpus_stats
 
 
 def test_training_order_deterministic_and_seed_sensitive(spark):
@@ -80,87 +77,3 @@ def test_interleave_domains_round_robin(spark):
     out2 = [r.domain for r in interleave_domains(df.repartition(5), "domain", seed=5).collect()]
     assert out == out2
 
-
-def test_corpus_stats_hand_checked(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "one two three", "en"),
-            (1, "uno dos", "es"),
-            (2, "one two three", "en"),   # exact duplicate of doc 0
-            (3, "", "en"),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    (card,) = corpus_stats(df).collect()
-    assert card.n_docs == 4
-    assert card.n_empty == 1
-    assert card.total_tokens == 8
-    assert card.max_tokens == 3
-    assert card.total_chars == 13 + 7 + 13
-    # 3 distinct texts of 4 docs -> dup rate 0.25 (HLL exact at n=3)
-    assert card.approx_distinct_texts == 3
-    assert card.approx_dup_rate == pytest.approx(0.25)
-    assert card.lang_counts == {"en": 3, "es": 1}
-    # no-lang variant drops the map
-    (bare,) = corpus_stats(df, lang_col=None).collect()
-    assert "lang_counts" not in bare.asDict()
-
-
-def test_model_save_load_roundtrip(spark, tmp_path):
-    """Tokenizer/LM artifacts persist and reload equivalently (the
-    train-once, encode-forever contract)."""
-    import pytest
-
-    from spotify_etl_aws_spark.operators.bpe import train_bpe
-    from spotify_etl_aws_spark.operators.lm import train_char_lm
-    from spotify_etl_aws_spark.operators.model_io import load_model, save_model
-    from spotify_etl_aws_spark.operators.unigram import train_unigram
-
-    texts = ["low lower lowest low low", "new newer newest new newer"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    from spotify_etl_aws_spark.operators.classifier import (
-        train_quality_classifier,
-    )
-
-    neg = spark.createDataFrame(
-        [("spam click buy now",), ("cheap prize winner",)], "text string"
-    )
-    from spotify_etl_aws_spark.operators.dsir import fit_dsir
-
-    models = [
-        train_bpe(df, num_merges=10),
-        train_unigram(df, vocab_size=40, seed_size=500),
-        train_char_lm(df, order=3),
-        train_quality_classifier(df, neg, dim=16, iters=3),
-        fit_dsir(df, neg, text_col="text", n_buckets=32),
-    ]
-    for i, m in enumerate(models):
-        p = str(tmp_path / f"model{i}.json")
-        save_model(m, p)
-        back = load_model(p)
-        assert back == m
-    with pytest.raises(TypeError):
-        save_model(object(), str(tmp_path / "bad.json"))  # type: ignore[arg-type]
-    with pytest.raises(ValueError, match="unknown model kind"):
-        import json
-
-        p = str(tmp_path / "weird.json")
-        open(p, "w").write(json.dumps({"kind": "nope"}))
-        load_model(p)
-
-
-def test_audit_summary_drop_table(spark):
-    from spotify_etl_aws_spark.operators.stats import audit_summary
-
-    audit = spark.createDataFrame(
-        [(i, "kept") for i in range(70)]
-        + [(100 + i, "near_duplicate") for i in range(20)]
-        + [(200 + i, "quality") for i in range(10)],
-        "doc_id bigint, status string",
-    )
-    rows = audit_summary(audit).collect()
-    assert [(r.status, r.n_docs) for r in rows] == [
-        ("kept", 70), ("near_duplicate", 20), ("quality", 10),
-    ]
-    assert abs(sum(r.fraction for r in rows) - 1.0) < 1e-9
-    assert rows[0].fraction == 0.7

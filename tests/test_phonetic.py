@@ -144,7 +144,7 @@ def test_lane_recall_and_rejection(spark, sf_dir, lane_rows):
 def test_lane_score_algebra(lane_rows):
     """Scores reproduce from the agree flags and the declared weights;
     everything emitted clears the threshold."""
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_linkage import (
         PHON_FS_THRESHOLD,
         _PHON_FS_WEIGHTS,
     )
@@ -212,12 +212,12 @@ def test_tf_adjusted_weights_algebra(spark, sf_dir):
     terms match the declared weights."""
     import math
 
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_linkage import (
         PHON_TF_SCALE,
         PHON_TF_THRESHOLD,
         _phon_frames,
-        link_part_phonetic_tf,
     )
+    from spotify_etl_aws_spark.queries.selection import link_part_phonetic_tf
 
     _, master = _phon_frames(spark, sf_dir)
     tf = {

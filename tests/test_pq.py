@@ -132,7 +132,7 @@ def test_pq_topk_recall_vs_exact(spark, emb, model):
 
 
 def _lane_fit_inputs(emb):
-    from spotify_etl_aws_spark.queries.selection import (
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
         PQ_DECIMALS,
         PQ_ITERS,
         PQ_K,
@@ -190,7 +190,10 @@ def test_lane_encode_and_adc_margins(spark, sf_dir, emb):
     both engines — but a raw value within drift of the midpoint is
     not)."""
     from spotify_etl_aws_spark.operators.pq import adc_table
-    from spotify_etl_aws_spark.queries.selection import PQ_TOPK, _pq_model
+    from spotify_etl_aws_spark.queries.lanes_vector_select import (
+        PQ_TOPK,
+        _pq_model,
+    )
     from spotify_etl_aws_spark.queries.vector import QUERY_VEC_ID
 
     model = _pq_model(spark, sf_dir)

@@ -10,12 +10,12 @@ import math
 import numpy as np
 import pytest
 
-from spotify_etl_aws_spark.queries.selection import (
+from spotify_etl_aws_spark.queries.lanes_monitoring import (
     PSI_BIN_CENTS,
     PSI_BINS,
     PSI_CUTOFF,
-    stats_psi_drift,
 )
+from spotify_etl_aws_spark.queries.selection import stats_psi_drift
 from spotify_etl_aws_spark.sources.readers import load_table
 
 

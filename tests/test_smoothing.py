@@ -12,7 +12,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spotify_etl_aws_spark.operators.smoothing import ewma_dyadic
-from spotify_etl_aws_spark.queries.selection import EWMA_WINDOW, ts_ewma_dyadic
+from spotify_etl_aws_spark.queries.lanes_monitoring import EWMA_WINDOW
+from spotify_etl_aws_spark.queries.selection import ts_ewma_dyadic
 
 
 def _frame(spark, rows):
