@@ -26,7 +26,13 @@ Differences from the reference, on purpose:
   overlap the same way. Each table runs the jobs of a one-at-a-time run
   and keeps the caller's job group, so the job count, the plans and the
   files written do not change; what shrinks is the time the executors
-  sit idle between small jobs.
+  sit idle between small jobs;
+- the contract gate is one aggregate over the three dims' keys and the
+  fact's foreign keys (``quality.KeyContracts``), about three Spark jobs
+  instead of one plan per check;
+- the incremental refresh (``refresh_gold_incremental``) replaces each
+  re-fetched playlist's fact partition with the batch's rows instead of
+  merging them, so a refresh leaves the fact a rebuild would.
 """
 
 from __future__ import annotations
@@ -38,23 +44,17 @@ from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 T = TypeVar("T")
 
 from ..operators.core import dims, fact_playlist_tracks
-from ..operators.quality import (
-    check_not_null,
-    check_references,
-    check_unique,
-    expect_all,
-)
+from ..operators.quality import KeyContracts, expect_all
 from ..operators.shred import shred
 from ..operators.staging import silver_projection, stage
 from ..schemas import BRONZE_TABLES
 from ..session import run_concurrently
 from ..sources.readers import read_raw_playlists
-from ..sources.sinks import write_parquet, write_partitioned
+from ..sources.sinks import partition_last, write_parquet, write_partitioned
 
 log = logging.getLogger(__name__)
 
@@ -172,7 +172,7 @@ def run_medallion(
         path = os.path.join(out_root, "gold", "fact_playlist_tracks")
         write_partitioned(fact, path, ["playlist_id"])
         landed["fact_playlist_tracks"] = spark.read.schema(
-            _partition_last(fact.schema, "playlist_id")
+            partition_last(fact.schema, "playlist_id")
         ).parquet(path)
         return landed
 
@@ -180,15 +180,8 @@ def run_medallion(
         _gold, "gold", gold_retries, retry_delay_s, sleeper
     )
     if validate:
-        expect_all(gold_contracts(landed))
+        log.info("gold contracts: %s", expect_all(gold_contracts(landed)))
     return landed
-
-
-def _partition_last(schema: StructType, col: str) -> StructType:
-    """The schema a ``partitionBy(col)`` write lands as: the partition
-    column moves from the files to the directory names, and a read
-    lists it after the data columns."""
-    return StructType([f for f in schema.fields if f.name != col] + [schema[col]])
 
 
 _DIM_KEYS = {
@@ -197,9 +190,7 @@ _DIM_KEYS = {
     "dim_artists": "artist_id",
 }
 
-# the fact's documented grain (see gold_contracts): one row per
-# (playlist, position)
-_FACT_KEYS = ["playlist_id", "track_number"]
+_FACT = "fact_playlist_tracks"
 
 
 def refresh_gold_incremental(
@@ -208,67 +199,105 @@ def refresh_gold_incremental(
     updates: dict[str, DataFrame],
     validate: bool = True,
 ) -> dict[str, DataFrame]:
-    """MERGE-shaped incremental gold refresh: upsert changed rows into
-    the landed gold tables instead of rebuilding them — the incremental
-    story the reference's CREATE OR REPLACE full rebuild
-    (dbt_project.yml:33-41) lacks.
+    """Incremental gold refresh: bring the landed gold tables up to date
+    with the gold-shaped batches of a delta instead of rebuilding them
+    — the incremental story the reference's CREATE OR REPLACE full
+    rebuild (dbt_project.yml:33-41) lacks.
 
-    ``updates`` maps gold table names to gold-shaped update batches
-    (changed + new rows only). Dims merge by primary key with a full
-    (broadcast-scale) rewrite; the fact merges by its (playlist,
-    position) grain and — being partitioned by ``playlist_id`` —
-    rewrites ONLY the partitions the batch touches, via dynamic
-    partition overwrite. Untouched fact partitions' files are not
+    ``updates`` maps gold table names to batches built from the delta's
+    playlists. The fact batch is a complete snapshot of every playlist
+    it names, as the reference's raw stage pulls whole playlists: each
+    of those ``playlist_id`` partitions is replaced by the batch's rows
+    in one dynamic-overwrite write (``sinks.upsert_partitioned``), so a
+    re-fetched playlist that lost tracks loses their fact rows, as a
+    rebuild would. When the batch also holds ``dim_playlists``, a
+    playlist in that batch with no fact row (no track of it resolved)
+    has its old fact partition deleted. The playlists written and
+    pruned are read from ``Observation``s on the two batches' writes,
+    which add no Spark job. Untouched fact partitions' files are not
     rewritten (pinned by test_medallion's file-mtime check).
 
-    The four tables are refreshed concurrently, each task being the
-    table's upsert (if the batch names it) and then its read-back, so
-    the upserts and the schema-inference reads overlap. An upsert that
-    fails does not stop its siblings: they finish, and then the first
-    failure in table order is raised. A partial refresh was possible
-    before too, as the tables are separate directories with no shared
-    commit; each upsert is idempotent for the same batch, so the
-    caller re-runs the whole refresh.
+    Dims merge by primary key with a full (broadcast-scale) rewrite
+    (``sinks.upsert_unpartitioned``): a dim row that the delta no longer
+    references is kept, where a rebuild would drop it. The contract gate
+    checks foreign keys from the fact to the dims only, so such rows
+    pass it.
+
+    The four upserts run concurrently, each dim task also reading its
+    table back; then the prune runs, then the fact is read back (with
+    the batch's schema, which the upsert checked against the landed
+    one), so its file listing follows the prune. An upsert that fails
+    does not stop its siblings: they finish, and then the first failure
+    in table order is raised, before any prune. A refresh can thus land
+    partly, as the tables are separate directories with no shared
+    commit; each upsert is idempotent for the same batch, so the caller
+    re-runs the whole refresh.
 
     Returns the re-read gold frames; ``validate`` re-runs the same
-    contract gate as the full build, so an upsert that would break a
-    PK/FK contract fails exactly like a full rebuild would."""
-    from ..sources.sinks import upsert_partitioned, upsert_unpartitioned
+    contract gate as the full build, so a refresh that would break a
+    PK/FK contract fails exactly like a full rebuild would. Logs one
+    INFO line with the fact partitions replaced and pruned and the
+    gate's per-check counts."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    names = list(_DIM_KEYS) + ["fact_playlist_tracks"]
+    from ..sources.sinks import drop_partitions, upsert_partitioned, upsert_unpartitioned
+
+    names = list(_DIM_KEYS) + [_FACT]
     for name in updates:
         if name not in names:
             raise ValueError(f"unknown gold table {name!r}")
+    batches = dict(updates)
+    listed = None
+    if _FACT in updates and "dim_playlists" in updates:
+        listed = Observation()
+        batches["dim_playlists"] = batches["dim_playlists"].observe(
+            listed, F.collect_set("playlist_id").alias("values")
+        )
 
-    def _refresh(name: str) -> DataFrame:
+    def _upsert(name: str):
         path = os.path.join(out_root, "gold", name)
-        if name in updates:
-            if name in _DIM_KEYS:
-                upsert_unpartitioned(updates[name], path, [_DIM_KEYS[name]])
-            else:
-                upsert_partitioned(updates[name], path, _FACT_KEYS, "playlist_id")
+        if name == _FACT:
+            # the fact's read-back waits for the prune below
+            if name not in batches:
+                return []
+            return upsert_partitioned(batches[name], path, "playlist_id")
+        if name in batches:
+            upsert_unpartitioned(batches[name], path, [_DIM_KEYS[name]])
         return spark.read.parquet(path)
 
-    landed = dict(zip(names, run_concurrently(spark, _refresh, names)))
-    if validate:
-        expect_all(gold_contracts(landed))
+    *dim_frames, replaced = run_concurrently(spark, _upsert, names)
+    landed = dict(zip(_DIM_KEYS, dim_frames))
+    fact_path = os.path.join(out_root, "gold", _FACT)
+    pruned = []
+    if listed is not None:
+        pruned = sorted(set(listed.get["values"]) - set(replaced))
+        drop_partitions(spark, fact_path, "playlist_id", pruned)
+    reader = spark.read
+    if _FACT in updates:
+        reader = reader.schema(partition_last(updates[_FACT].schema, "playlist_id"))
+    landed[_FACT] = reader.parquet(fact_path)
+    contracts = expect_all(gold_contracts(landed)) if validate else "not checked"
+    log.info(
+        "gold refresh: %d fact partitions replaced %s, %d pruned %s; contracts %s",
+        len(replaced),
+        replaced,
+        len(pruned),
+        pruned,
+        contracts,
+    )
     return landed
 
 
-def gold_contracts(gold_frames: dict[str, DataFrame]) -> dict[str, DataFrame]:
+def gold_contracts(gold_frames: dict[str, DataFrame]) -> KeyContracts:
     """The reference's documented schema contracts as named checks
     (dbt/spotify_etl_aws/models/staging/schema.yml:8,27-40,46,57):
     each dim's PK unique + not-null, each fact FK resolving. The fact
     itself gets NO uniqueness contract — its grain is (playlist,
     position): the same track legitimately repeats across playlists
     (and even within one), and the reference declares no fact PK."""
-    fact = gold_frames["fact_playlist_tracks"]
-    checks: dict[str, DataFrame] = {}
-    for name, pk in _DIM_KEYS.items():
-        checks[f"{name}.{pk}_unique"] = check_unique(gold_frames[name], [pk])
-        checks[f"{name}.{pk}_not_null"] = check_not_null(gold_frames[name], [pk])
-    for name, pk in _DIM_KEYS.items():
-        checks[f"fact_playlist_tracks.{pk}_references"] = check_references(
-            fact, pk, gold_frames[name], pk
-        )
-    return checks
+    return KeyContracts(
+        parents={name: (gold_frames[name], pk) for name, pk in _DIM_KEYS.items()},
+        child_name=_FACT,
+        child=gold_frames[_FACT],
+    )

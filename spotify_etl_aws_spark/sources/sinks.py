@@ -15,6 +15,8 @@ the end of the gold build.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
+
 from ..operators.lineage import cut_lineage_eager
 from ..session import run_concurrently
 
@@ -46,73 +48,100 @@ def save_as_table(df: DataFrame, name: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).saveAsTable(name)
 
 
-def upsert_partitioned(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str,
-) -> None:
-    """MERGE-shaped upsert into a directory-partitioned parquet table:
-    rewrite ONLY the partitions the update batch touches, keeping the
-    latest version of each key — the incremental alternative to the
-    reference's CREATE OR REPLACE full rebuild (dbt_project.yml:33-41).
+def partition_last(schema: StructType, col: str) -> StructType:
+    """The schema a ``partitionBy(col)`` write lands as: the partition
+    column moves from the files to the directory names, and a read
+    lists it after the data columns."""
+    return StructType([f for f in schema.fields if f.name != col] + [schema[col]])
 
-    Plain-parquet MERGE recipe (no table format needed):
-    1. read back just the TOUCHED partitions of the target (semi-join
-       on the partition column against the update batch's distinct
-       partition values — broadcastable, and eligible for dynamic
-       partition pruning at scale);
-    2. tag target rows batch=0 and update rows batch=1, union, and
-       keep ``row_number() over (partition by keys order by batch
-       desc) = 1`` — update wins per key, untouched keys survive;
-    3. write with the writer option ``partitionOverwriteMode=dynamic``
-       so mode=overwrite replaces only partitions present in the merged
-       frame — every other partition's files are untouched on disk.
-       The option is the write's own: the session config is not
-       touched, so concurrent writes in the session are unaffected.
 
-    The output path is also the input path, and no lineage cut is
-    needed for that: a dynamic-overwrite write stages its output and
-    swaps the partitions in only at job commit, after every task that
-    reads the target has finished. (A Delta/Iceberg MERGE replaces this
-    whole function when a table format is available.)"""
-    from pyspark.sql import Window
+def upsert_partitioned(df: DataFrame, path: str, partition_col: str) -> list:
+    """Replace the partitions of a directory-partitioned parquet table
+    that the batch names, and return those partition values.
+
+    Each partition value in ``df`` is a complete snapshot: its directory
+    ends up holding exactly the batch's rows for it, as a rebuild with
+    the reference's CREATE OR REPLACE (dbt_project.yml:33-41) would
+    leave it. That is one write with the writer option
+    ``partitionOverwriteMode=dynamic``: mode=overwrite replaces only the
+    partitions present in the batch, and every other partition's files
+    are untouched on disk. The target is not read and no row is merged.
+    The option is the write's own, so the session config and concurrent
+    writes in the session are unaffected. A partition the batch holds no
+    rows for is left as it is; ``drop_partitions`` removes one.
+
+    The batch must carry the landed table's columns with their types
+    (the partition column's by name only: a read infers its type from
+    the directory names), in its order once the partition column moves
+    last (``partition_last``);
+    one schema-inference read of the target checks that before anything
+    is written, so a batch with a missing, extra, retyped or reordered
+    column raises ``ValueError`` and leaves the table as it was. The
+    values written come from an ``Observation`` on the write, which adds
+    no Spark job. (A Delta/Iceberg ``replaceWhere`` replaces this when
+    a table format is available.)"""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    spark = df.sparkSession
-    target = spark.read.parquet(path)
-    touched = df.select(partition_col).distinct()
-    existing = target.join(F.broadcast(touched), partition_col, "left_semi")
-    merged = (
-        existing.withColumn("__batch", F.lit(0))
-        .unionByName(df.withColumn("__batch", F.lit(1)))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy(*keys).orderBy(F.desc("__batch"))
-            ),
+    landed = df.sparkSession.read.parquet(path).schema
+    batch = partition_last(df.schema, partition_col)
+
+    def columns(schema: StructType) -> list[tuple[str, str | None]]:
+        # the landed partition column's type is inferred from directory
+        # names, so only its name and place are compared
+        return [
+            (f.name, None if f.name == partition_col else f.dataType.simpleString())
+            for f in schema.fields
+        ]
+
+    if columns(batch) != columns(landed):
+        missing = [c for c in landed.fieldNames() if c not in batch.fieldNames()]
+        extra = [c for c in batch.fieldNames() if c not in landed.fieldNames()]
+        raise ValueError(
+            f"batch for {path} does not match the landed columns: missing "
+            f"{missing}, extra {extra}; landed {columns(landed)}, batch {columns(batch)}"
         )
-        .filter(F.col("__rn") == 1)
-        .drop("__batch", "__rn")
-    )
+    written = Observation()
     (
-        merged.write.mode("overwrite")
+        df.select(*batch.fieldNames())
+        .observe(written, F.collect_set(partition_col).alias("values"))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(path)
     )
+    return sorted(written.get["values"])
+
+
+def drop_partitions(spark, path: str, partition_col: str, values: list[str]) -> None:
+    """Delete the ``partition_col=value`` directories of ``values`` under
+    ``path``, with each value escaped the way Spark writes it, through
+    the Hadoop ``FileSystem`` API so object-store paths (``s3a://``)
+    work as local ones do. A missing directory is not an error."""
+    if not values:
+        return
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    names = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for v in values:
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(root, names.getPartitionPathString(partition_col, v)),
+            True,
+        )
 
 
 def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
-    """Key-window upsert for small unpartitioned tables (gold dims):
-    same latest-version-per-key merge, full-file rewrite — a dim is
+    """Key-window upsert for small unpartitioned tables (gold dims): the
+    batch's rows replace the landed rows with the same key, and every
+    other landed row stays, in a full-file rewrite — a dim is
     broadcast-scale by definition, so rewriting it is cheaper than
-    maintaining partitions on it.
+    maintaining partitions on it. Unlike ``upsert_partitioned`` this is
+    a merge: a key the batch does not name is kept, never dropped.
 
-    Unlike ``upsert_partitioned``, the merged frame is localCheckpoint-ed
-    before the write. A static overwrite deletes the path it reads
-    before its tasks run, so without the cut the write fails with
-    ``FAILED_READ_FILE.FILE_NOT_EXIST``."""
+    The merged frame is localCheckpoint-ed before the write. A static
+    overwrite deletes the path it reads before its tasks run, so without
+    the cut the write fails with ``FAILED_READ_FILE.FILE_NOT_EXIST``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -174,8 +203,8 @@ def commit_epoch(
     writes: dict[str, "object"],
 ) -> None:
     """Atomic-visibility multi-dataset epoch commit on plain parquet —
-    the manifest/_SUCCESS pattern generalized from ``compact_dataset``'s
-    rename swap.
+    the manifest/_SUCCESS pattern over a staged write and a rename
+    swap.
 
     An epoch-keyed ``mode=overwrite`` is idempotent per PARTITION, but
     a foreachBatch that writes several datasets (corpus + signature
@@ -200,9 +229,8 @@ def commit_epoch(
     by marker set = partition pruning on ``epoch``); a crashed commit
     leaves finals untouched-or-complete and NO marker, and the
     replayed batch simply re-runs the same commit (idempotent).
-    Local-filesystem swap semantics, same contract as
-    ``compact_dataset``; a table format's transactional commit
-    replaces this on object stores."""
+    Local-filesystem swap semantics (``os.rename``); a table format's
+    transactional commit replaces this on object stores."""
     import os
     import shutil
 
@@ -257,112 +285,6 @@ def read_committed_epochs(spark, root: str, dataset: str) -> DataFrame:
 
     df = spark.read.parquet(os.path.join(root, dataset))
     return df.filter(F.col("epoch").isin(committed_epochs(root)))
-
-
-def compact_dataset(
-    spark,
-    path: str,
-    target_file_mb: int = 128,
-    partition_cols: list[str] | None = None,
-) -> dict:
-    """Small-file compaction (the OPTIMIZE/bin-packing maintenance op a
-    streaming-landed dataset needs): rewrite ``path`` so each output
-    file approaches ``target_file_mb``, preserving rows and the
-    partition layout. Incremental sinks land one small file per
-    micro-batch; a month of 5-minute batches is ~8k files whose
-    per-file open/footer cost dominates scans long before data cost
-    does.
-
-    File count = ceil(input_bytes / target): coalesce-style planning on
-    the INPUT byte size (parquet re-encodes to roughly similar size;
-    exactness is not the contract — file-count reduction is). With
-    ``partition_cols`` the shuffle keys on them, so each partition
-    value compacts into one task (one output file per partition dir;
-    a single mega-partition stays one file — split such a table on a
-    finer partition scheme, not here).
-
-    The swap is rename-based and CRASH-RECOVERABLE, not atomic: plain
-    filesystems cannot atomically exchange directories, so there is a
-    brief window where ``path`` is absent (a table-format commit —
-    Delta/Iceberg — is the production answer for readers that cannot
-    tolerate it). A crash mid-swap leaves the data in
-    ``path.__compact_old__``; the next call restores it before doing
-    anything else, and stale temp dirs from a crashed write are
-    removed. Returns {files_before, files_after, bytes_before}.
-
-    LOCAL-FILESYSTEM ONLY: the swap walks and renames with os/shutil,
-    which cannot see ``s3a://``/``hdfs://`` paths — on those it would
-    count 0 input files, write tmp via Spark, then die at the rename
-    leaving a stray tmp dir. Remote paths are rejected up front; an
-    object-store deployment compacts through a table format's
-    OPTIMIZE (Delta/Iceberg), which owns the commit protocol there.
-    """
-    import math
-    import os
-    import re
-    import shutil
-
-    if path.startswith("file:"):
-        path = path[5:]  # same filesystem, scheme-stripped for os.*
-    if re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/", path):
-        raise ValueError(
-            f"compact_dataset is local-filesystem-only (os.rename swap); "
-            f"got remote path {path!r} — use a table format's OPTIMIZE "
-            f"for object stores"
-        )
-    tmp = f"{path}.__compact_tmp__"
-    old = f"{path}.__compact_old__"
-    # crash recovery: a previous run may have died mid-swap or mid-write
-    if os.path.exists(old) and not os.path.exists(path):
-        os.rename(old, path)  # died between the two renames
-    if os.path.exists(old):
-        shutil.rmtree(old)  # died before cleanup; path is the new data
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)  # died mid-write; tmp is garbage
-
-    df = spark.read.parquet(path)
-    files = [
-        (f, os.path.getsize(f))
-        for f in (
-            os.path.join(dp, fn)
-            for dp, _, fns in os.walk(path)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
-    ]
-    n_before = len(files)
-    bytes_before = sum(s for _, s in files)
-    n_files = max(1, math.ceil(bytes_before / (target_file_mb << 20)))
-    if partition_cols:
-        # keying the shuffle on the partition columns co-locates each
-        # partition value in one task -> one file per partition dir
-        # (round-robin would scatter every partition across every task:
-        # n_files x n_partitions fragments, the opposite of compaction)
-        from pyspark.sql import functions as _F
-
-        repartitioned = df.repartition(
-            n_files, *[_F.col(c) for c in partition_cols]
-        )
-        writer = repartitioned.write.mode("overwrite").partitionBy(
-            *partition_cols
-        )
-    else:
-        writer = df.repartition(n_files).write.mode("overwrite")
-    writer.parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    n_after = sum(
-        1
-        for dp, _, fns in os.walk(path)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-    return {
-        "files_before": n_before,
-        "files_after": n_after,
-        "bytes_before": bytes_before,
-    }
 
 
 def save_hilbert_clustered(
@@ -464,8 +386,10 @@ def optimize_hilbert_incremental(
     3. each group is read, range-repartitioned into the same number
        of files, sorted within partitions, written to a temp dir;
        untouched files HARDLINK into the temp dir;
-    4. the same crash-recoverable two-rename swap as
-       ``compact_dataset`` publishes the new state.
+    4. a crash-recoverable two-rename swap (the table moves aside, the
+       temp dir moves in, the old copy is deleted) publishes the new
+       state; the next call finishes or undoes a swap a crash cut
+       short.
 
     Cost scales with the STRADDLED data, not the table: a table of N
     files with one appended epoch touching k file ranges rewrites
@@ -500,8 +424,8 @@ def optimize_hilbert_incremental(
     rewrites submit as concurrent Spark jobs from a small driver
     pool (independent non-overlapping inputs/outputs).
 
-    LOCAL-FILESYSTEM ONLY (same contract and guard as
-    compact_dataset); on object stores a table format's OPTIMIZE owns
+    LOCAL-FILESYSTEM ONLY (the swap is ``os.rename``; remote paths are
+    rejected up front); on object stores a table format's OPTIMIZE owns
     the commit. Returns {files, groups_rewritten, files_rewritten,
     files_linked, files_after}."""
     import os
@@ -519,7 +443,7 @@ def optimize_hilbert_incremental(
         )
     tmp = f"{path}.__hopt_tmp__"
     old = f"{path}.__hopt_old__"
-    # crash recovery (compact_dataset protocol)
+    # crash recovery: a previous run died mid-swap or mid-write
     if os.path.exists(old) and not os.path.exists(path):
         os.rename(old, path)
     if os.path.exists(old):

@@ -100,21 +100,28 @@ def _playlist_items() -> list[dict]:
     return items
 
 
-def _write_fixture(path: str, items: list[dict]) -> str:
-    playlist = {
-        "id": "PL1",
+def _playlist(pid: str, items: list[dict], followers: int = 123) -> dict:
+    return {
+        "id": pid,
         "name": "Fixture Playlist",
         "description": "golden medallion fixture",
         "owner": {"id": "owner-1"},
-        "followers": {"total": 123},
+        "followers": {"total": followers},
         "public": True,
         "snapshot_id": "snap-1",
         "images": [{"url": "https://img/1", "height": 640, "width": 640}],
         "tracks": {"total": len(items), "limit": 100, "offset": 0, "items": items},
     }
+
+
+def _write_playlists(path: str, playlists: list[dict]) -> str:
     with open(path, "w") as f:
-        json.dump([playlist], f)
+        json.dump(playlists, f)
     return path
+
+
+def _write_fixture(path: str, items: list[dict]) -> str:
+    return _write_playlists(path, [_playlist("PL1", items)])
 
 
 @pytest.fixture(scope="module")
@@ -194,14 +201,17 @@ def _refresh_updates(spark, raw: str):
     return gold(stage({t: silver_projection(df, t) for t, df in bronze.items()}))
 
 
-def test_refresh_job_count(spark, tmp_path):
+def test_refresh_job_count(spark, tmp_path, caplog):
     """Pin the refresh's job budget: upserting all four gold tables of
-    the golden lake and re-running the contract gate submits 42 jobs:
-    the count of the one-table-at-a-time refresh, less the lineage cut
-    the fact's dynamic-overwrite upsert no longer pays. The four tables are
-    refreshed on pool threads; a thread that lost the caller's job
-    group would drop its jobs from the count, and concurrency must not
-    add a job either."""
+    the golden lake and re-running the contract gate submits 26 jobs,
+    16 fewer than the 42 of the key merge and the per-check gate. The
+    fact replace is one schema read and one write, with no read of the
+    target, no window and no read-back schema inference; the gate is one
+    aggregate of 3 jobs instead of 13. The partitions written and
+    pruned come from ``Observation``s, and logging them (INFO is on
+    here) adds no job. The four tables are refreshed on pool threads; a
+    thread that lost the caller's job group would drop its jobs from
+    the count, and concurrency must not add a job either."""
     from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
 
     raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
@@ -212,11 +222,13 @@ def test_refresh_job_count(spark, tmp_path):
     group = "refresh-job-budget"
     sc.setJobGroup(group, "pin: gold refresh job count")
     try:
-        landed = refresh_gold_incremental(spark, lake, updates)
+        with caplog.at_level(logging.INFO, logger="spotify_etl_aws_spark.plans.medallion"):
+            landed = refresh_gold_incremental(spark, lake, updates)
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
-    assert len(jobs) == 42
+    assert len(jobs) == 26
+    assert any(r.getMessage().startswith("gold refresh: 1 fact partitions") for r in caplog.records)
     assert landed["fact_playlist_tracks"].count() == N_TRACKS
 
 
@@ -491,11 +503,11 @@ def test_null_fk_drops_from_fact(spark, tmp_path):
 def test_incremental_gold_refresh_upserts_only_touched_partitions(
     spark, tmp_path
 ):
-    """MERGE-shaped incremental refresh (plans/medallion.py:
-    refresh_gold_incremental): a second run with changed rows updates
-    only the touched fact partitions (untouched partition files are
-    bit-identical on disk afterward), keys are upserted not duplicated,
-    and the gold contracts still gate the result."""
+    """Incremental refresh (plans/medallion.py:refresh_gold_incremental):
+    a fact batch is the full snapshot of the playlists it names, and
+    replaces only those fact partitions (untouched partition files are
+    bit-identical on disk afterward); dim keys are upserted, not
+    duplicated; and the gold contracts still gate the result."""
     import os
 
     from pyspark.sql import functions as F
@@ -536,17 +548,20 @@ def test_incremental_gold_refresh_upserts_only_touched_partitions(
 
     before_p1 = _listing(p1)
 
-    # wave 2: update ONE row in p2 only — p1's partition files must not
-    # be rewritten
+    # wave 2: re-fetch p2 with ONE row changed — the batch is p2's full
+    # snapshot, and p1's partition files must not be rewritten
     tn = p2_fact.first().track_number
-    upd = p2_fact.filter(F.col("track_number") == tn).withColumn(
-        "track_name", F.lit("UPDATED TITLE")
+    upd = p2_fact.withColumn(
+        "track_name",
+        F.when(F.col("track_number") == tn, F.lit("UPDATED TITLE")).otherwise(
+            F.col("track_name")
+        ),
     )
     landed = refresh_gold_incremental(spark, lake, {"fact_playlist_tracks": upd})
     assert _listing(p1) == before_p1
 
     fact3 = landed["fact_playlist_tracks"]
-    assert fact3.count() == 2 * n0  # upsert, not append
+    assert fact3.count() == 2 * n0  # replaced, not appended
     got = fact3.filter(
         (F.col("playlist_id") == "p2") & (F.col("track_number") == tn)
     ).collect()
@@ -577,3 +592,103 @@ def test_incremental_gold_refresh_upserts_only_touched_partitions(
 
     with _pytest.raises(ValueError, match="playlist_id_references"):
         refresh_gold_incremental(spark, lake, {"fact_playlist_tracks": bad})
+
+
+def _lake_listing(root: str) -> dict[str, tuple[int, int]]:
+    """relative path -> (size, mtime_ns) of every file under ``root``."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            st = os.stat(os.path.join(d, f))
+            out[os.path.relpath(os.path.join(d, f), root)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _gold_rows(lake: str) -> dict[str, list]:
+    """Every gold table's rows, read with pyarrow (off Spark) and
+    sorted, with the fact's ``playlist_id`` from its directory names."""
+    import pyarrow.dataset as ds
+
+    out = {}
+    for name in ["dim_playlists", "dim_albums", "dim_artists", "fact_playlist_tracks"]:
+        table = ds.dataset(
+            os.path.join(lake, "gold", name), format="parquet", partitioning="hive"
+        ).to_table()
+        out[name] = (table.column_names, sorted(map(repr, table.to_pylist())))
+    return out
+
+
+_CONTRACT_NAMES = [
+    "dim_playlists.playlist_id_unique",
+    "dim_playlists.playlist_id_not_null",
+    "dim_albums.album_id_unique",
+    "dim_albums.album_id_not_null",
+    "dim_artists.artist_id_unique",
+    "dim_artists.artist_id_not_null",
+    "fact_playlist_tracks.playlist_id_references",
+    "fact_playlist_tracks.album_id_references",
+    "fact_playlist_tracks.artist_id_references",
+]
+
+
+@pytest.mark.parametrize("case", ["shrunk", "emptied"])
+def test_refresh_of_refetched_playlists_equals_rebuild(spark, tmp_path, caplog, case):
+    """A re-fetched playlist is a complete snapshot, so a refresh must
+    leave the gold a full rebuild of the post-delta playlists leaves.
+    ``shrunk``: PL2 comes back with 12 of its 30 tracks, and the 18 it
+    lost leave the fact. ``emptied``: PL3 comes back with no track that
+    resolves (none has an artist), so the batch holds no fact row for it,
+    and its old partition is deleted because PL3 is in the
+    ``dim_playlists`` batch. PL1 holds every album and artist, so no dim
+    row is orphaned and the dims' key merge also agrees with the
+    rebuild. The refresh logs the partitions it replaced and pruned, and
+    the build logs its contract counts."""
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    items = _playlist_items()
+    base = [_playlist("PL1", items), _playlist("PL2", items[:30]), _playlist("PL3", items[30:])]
+    if case == "shrunk":
+        delta = [_playlist("PL2", items[:12], followers=7)]
+        logged = "1 fact partitions replaced ['PL2'], 0 pruned []"
+    else:
+        unresolved = [_item(i, _album(i % N_ALBUMS), []) for i in range(50, 55)]
+        delta = [_playlist("PL3", unresolved, followers=7)]
+        logged = "0 fact partitions replaced [], 1 pruned ['PL3']"
+    after = [pl for pl in base if pl["id"] != delta[0]["id"]] + delta
+
+    lake = str(tmp_path / "lake")
+    with caplog.at_level(logging.INFO, logger="spotify_etl_aws_spark.plans.medallion"):
+        run_medallion(spark, _write_playlists(str(tmp_path / "base.json"), base), lake)
+        updates = _refresh_updates(spark, _write_playlists(str(tmp_path / "delta.json"), delta))
+        refresh_gold_incremental(spark, lake, updates)
+    rebuilt = str(tmp_path / "rebuilt")
+    run_medallion(spark, _write_playlists(str(tmp_path / "after.json"), after), rebuilt)
+
+    assert _gold_rows(lake) == _gold_rows(rebuilt)
+    messages = [r.getMessage() for r in caplog.records]
+    assert [m for m in messages if m.startswith("gold refresh:")] == [
+        f"gold refresh: {logged}; contracts "
+        + str({name: 0 for name in _CONTRACT_NAMES})
+    ]
+    assert [m for m in messages if m.startswith("gold contracts:")] == [
+        "gold contracts: " + str({name: 0 for name in _CONTRACT_NAMES})
+    ]
+
+
+def test_refresh_rejects_fact_batch_with_drifted_columns(spark, tmp_path):
+    """The fact replace checks the batch against the landed columns
+    before it writes: a batch missing a column, or carrying an extra
+    one, raises and leaves every file of the lake as it was."""
+    from pyspark.sql import functions as F
+
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    lake = str(tmp_path / "lake")
+    run_medallion(spark, raw, lake, validate=False)
+    fact = _refresh_updates(spark, raw)["fact_playlist_tracks"]
+    before = _lake_listing(lake)
+    for batch in (fact.drop("track_name"), fact.withColumn("extra", F.lit(1))):
+        with pytest.raises(ValueError, match="does not match the landed columns"):
+            refresh_gold_incremental(spark, lake, {"fact_playlist_tracks": batch})
+        assert _lake_listing(lake) == before

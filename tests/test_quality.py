@@ -14,6 +14,7 @@ from spotify_etl_aws_spark.operators.quality import (
     check_not_null,
     check_references,
     check_unique,
+    contract_counts,
     expect_all,
 )
 from spotify_etl_aws_spark.plans.medallion import run_medallion
@@ -99,6 +100,74 @@ def test_medallion_gold_honours_reference_schema_contracts(gold_frames):
 
     counts = expect_all(gold_contracts(gold_frames))
     assert len(counts) == 9 and set(counts.values()) == {0}
+
+
+def test_key_contract_gate_counts_equal_the_check_frames(spark):
+    """The one-aggregate gate counts what the separate ``check_*``
+    frames count, check by check and in the same order, on dirty gold
+    frames: a duplicated and a NULL ``dim_playlists`` key, a duplicated
+    ``dim_albums`` key, a NULL ``dim_artists`` key, and fact foreign
+    keys that are orphaned (each repeated), NULL, or resolving."""
+    from spotify_etl_aws_spark.plans.medallion import gold_contracts
+
+    dims = {
+        "dim_playlists": spark.createDataFrame(
+            [("PL1", "a"), ("PL1", "b"), (None, "c"), ("PL2", "d")],
+            "playlist_id string, playlist_name string",
+        ),
+        "dim_albums": spark.createDataFrame(
+            [("A1",), ("A2",), ("A2",)], "album_id string"
+        ),
+        "dim_artists": spark.createDataFrame([("R1",), (None,)], "artist_id string"),
+    }
+    fact = spark.createDataFrame(
+        [
+            ("PL1", "A1", "R1"),
+            ("PL9", "A1", "R1"),
+            ("PL9", "A3", "R7"),
+            ("PL2", None, "R7"),
+            ("PL2", "A3", None),
+            ("PL8", "A4", "R1"),
+        ],
+        "playlist_id string, album_id string, artist_id string",
+    )
+    gold = {**dims, "fact_playlist_tracks": fact}
+    keys = [("dim_playlists", "playlist_id"), ("dim_albums", "album_id"),
+            ("dim_artists", "artist_id")]
+    reference = {}
+    for name, pk in keys:
+        reference[f"{name}.{pk}_unique"] = check_unique(dims[name], [pk]).count()
+        reference[f"{name}.{pk}_not_null"] = check_not_null(dims[name], [pk]).count()
+    for name, pk in keys:
+        reference[f"fact_playlist_tracks.{pk}_references"] = check_references(
+            fact, pk, dims[name], pk
+        ).count()
+    assert list(reference.values()) == [1, 1, 1, 0, 0, 1, 2, 2, 1]
+
+    counts = contract_counts(gold_contracts(gold))
+    assert list(counts.items()) == list(reference.items())
+    detail = ", ".join(f"{k} ({n} violations)" for k, n in reference.items() if n)
+    with pytest.raises(ValueError) as ei:
+        expect_all(gold_contracts(gold))
+    assert str(ei.value) == f"data-quality contracts failed: {detail}"
+
+
+def test_key_contract_gate_job_budget(spark, gold_frames):
+    """The gate on the golden gold frames is one grouped aggregate and
+    one global one: at most 3 Spark jobs under AQE. Nine separate check
+    plans, unioned and counted, ran 13."""
+    from spotify_etl_aws_spark.plans.medallion import gold_contracts
+
+    sc = spark.sparkContext
+    group = "contract-gate-budget"
+    sc.setJobGroup(group, "pin: contract gate job count")
+    try:
+        counts = expect_all(gold_contracts(gold_frames))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(counts.values()) == {0}
+    assert len(jobs) <= 3
 
 
 def test_validate_gate_accepts_shared_tracks_across_playlists(spark, tmp_path):

@@ -303,17 +303,6 @@ def test_ivf_partitioned_layout_prunes_probed_cells(spark, sf_dir, tmp_path):
     assert got_cells == set(probe)
 
 
-def test_compact_dataset_rejects_remote_paths(spark, tmp_path):
-    """ADVICE fix: the os.rename-based swap cannot operate on object
-    stores — a remote path must fail fast, before any Spark write
-    could leave a stray tmp directory."""
-    from spotify_etl_aws_spark.sources.sinks import compact_dataset
-
-    for bad in ("s3a://bucket/table", "hdfs://nn:8020/warehouse/t"):
-        with pytest.raises(ValueError, match="local-filesystem-only"):
-            compact_dataset(spark, bad)
-
-
 def test_q4_cobucketed_plan_and_parity(spark, sf_dir):
     """The q4 100 TB posture (round-7 verdict item 1): lineitem and
     orders co-bucketed on orderkey semi-join with ZERO data-sized

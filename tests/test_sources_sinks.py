@@ -274,45 +274,6 @@ def test_png_adam7_interlaced_decode():
     assert img.pixels == pix.tobytes()
 
 
-def test_compact_dataset_bin_packs_small_files(spark, sf_dir, tmp_path):
-    """Compaction: a micro-batch-landed dataset's many small files
-    rewrite to the planned count, rows and partition layout intact."""
-    from pyspark.sql import functions as F
-
-    from spotify_etl_aws_spark.sources.sinks import compact_dataset
-
-    li = load_table(spark, sf_dir, "lineitem").limit(5000)
-    path = str(tmp_path / "landed")
-    # simulate 20 micro-batches: one small file each
-    for i in range(20):
-        li.filter(F.col("l_orderkey") % 20 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-    before = spark.read.parquet(path)
-    n_rows = before.count()
-    stats = compact_dataset(spark, path, target_file_mb=128)
-    assert stats["files_before"] >= 20
-    assert stats["files_after"] == 1  # 5k rows << 128MB
-    after = spark.read.parquet(path)
-    assert after.count() == n_rows
-    assert sorted(after.columns) == sorted(before.columns)
-    # partitioned layout: the partition dirs survive compaction
-    ppath = str(tmp_path / "landed_part")
-    for i in range(6):
-        li.filter(F.col("l_orderkey") % 6 == i).withColumn(
-            "bucket", F.col("l_orderkey") % 3
-        ).coalesce(1).write.mode("append").partitionBy("bucket").parquet(ppath)
-    stats = compact_dataset(
-        spark, ppath, target_file_mb=128, partition_cols=["bucket"]
-    )
-    after = spark.read.parquet(ppath)
-    assert after.count() == n_rows
-    assert {r.bucket for r in after.select("bucket").distinct().collect()} == {
-        0, 1, 2,
-    }
-    assert stats["files_after"] <= 3 * 1 + 3  # at most a file per partition+overhead
-
-
 def test_commit_epoch_atomic_visibility_and_crash_replay(spark, tmp_path):
     """commit_epoch: a crash mid-commit leaves finals untouched and NO
     marker (readers see nothing of the epoch); the replayed commit
