@@ -32,7 +32,13 @@ Differences from the reference, on purpose:
   instead of one plan per check;
 - the incremental refresh (``refresh_gold_incremental``) replaces each
   re-fetched playlist's fact partition with the batch's rows instead of
-  merging them, so a refresh leaves the fact a rebuild would.
+  merging them, so a refresh leaves the fact a rebuild would;
+- every unpartitioned write (bronze, silver, the dims, a refreshed dim
+  and the incremental bronze append) lands one file per
+  ``spark.sql.files.maxPartitionBytes`` of its planned size
+  (``sinks.write_parquet``), not one per core: a full build of 20
+  playlists writes 31 files instead of 58. The fact keeps one file per
+  ``playlist_id`` partition.
 """
 
 from __future__ import annotations
@@ -228,10 +234,13 @@ def refresh_gold_incremental(
     the batch's schema, which the upsert checked against the landed
     one), so its file listing follows the prune. An upsert that fails
     does not stop its siblings: they finish, and then the first failure
-    in table order is raised, before any prune. A refresh can thus land
-    partly, as the tables are separate directories with no shared
-    commit; each upsert is idempotent for the same batch, so the caller
-    re-runs the whole refresh.
+    in table order is raised, before any prune. A failed upsert leaves
+    its own table as it was: a dim's merged rows replace it only once
+    fully written (a staging directory and a rename), and the fact's
+    dynamic overwrite moves partitions in only when its job commits. A
+    refresh can still land partly, as the tables are separate
+    directories with no shared commit; each upsert is idempotent for the
+    same batch, so re-running the whole refresh converges.
 
     Returns the re-read gold frames; ``validate`` re-runs the same
     contract gate as the full build, so a refresh that would break a

@@ -10,6 +10,13 @@ The reference's MotherDuck CTAS (bronze.py:294-318) maps to
 export — which re-runs after **every** core model, 4x
 (dbt_project.yml:41) — becomes a single explicit ``write_parquet`` at
 the end of the gold build.
+
+File sizing: an unpartitioned medallion write (``write_parquet``, and
+through it the dim upsert and the incremental bronze append) lands one
+file per ``spark.sql.files.maxPartitionBytes`` of the frame's planned
+size, not one per task. Spark's split planner spreads an input smaller
+than cores x ``maxPartitionBytes`` over every core, so without the rule
+a 100 KB table lands as one small file per core.
 """
 
 from __future__ import annotations
@@ -17,12 +24,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
-from ..operators.lineage import cut_lineage_eager
 from ..session import run_concurrently
 
 
+def _sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``ceil(planned bytes / maxPartitionBytes)``
+    partitions, so each written file holds about one read split.
+
+    The planned bytes are the optimized plan's ``sizeInBytes``: for a
+    scan, the scanned files' size, scaled by the columns kept. Reading
+    it runs no Spark job (``df.rdd.getNumPartitions()`` would, under AQE,
+    run the frame's shuffle stages). ``coalesce`` is narrow, adds no
+    shuffle and no job, and is a no-op when it asks for at least the
+    partitions the frame already has. So a scan larger than cores x
+    ``maxPartitionBytes``, whose splits already hold at most
+    ``maxPartitionBytes`` each, keeps its partitioning, as does a frame
+    Spark cannot size (its estimate is ``spark.sql.defaultSizeInBytes``).
+    An inner join's estimate is the product of its sides' sizes, far
+    above its output, so a join is seldom coalesced."""
+    jconf = df.sparkSession._jsparkSession.sessionState().conf()
+    planned = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    files = -(-planned // jconf.filesMaxPartitionBytes())
+    return df.coalesce(min(max(files, 1), 2**31 - 1))
+
+
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
+    """Unpartitioned parquet, sized by the frame's planned bytes: one
+    file per ``spark.sql.files.maxPartitionBytes`` (``_sized``), where
+    Spark alone would land one file per task, so one per core for a
+    table smaller than cores x ``maxPartitionBytes``."""
+    _sized(df).write.mode(mode).parquet(path)
 
 
 def write_partitioned(
@@ -113,22 +144,32 @@ def upsert_partitioned(df: DataFrame, path: str, partition_col: str) -> list:
     return sorted(written.get["values"])
 
 
+def _hadoop_fs(spark, path: str):
+    """The Hadoop ``FileSystem`` of ``path`` and its ``Path``, so that
+    object-store paths (``s3a://``) work as local ones do."""
+    root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), root
+
+
 def drop_partitions(spark, path: str, partition_col: str, values: list[str]) -> None:
     """Delete the ``partition_col=value`` directories of ``values`` under
     ``path``, with each value escaped the way Spark writes it, through
-    the Hadoop ``FileSystem`` API so object-store paths (``s3a://``)
-    work as local ones do. A missing directory is not an error."""
+    the Hadoop ``FileSystem`` API. A missing directory is not an error."""
     if not values:
         return
     jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, root = _hadoop_fs(spark, path)
     names = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     for v in values:
         fs.delete(
             jvm.org.apache.hadoop.fs.Path(root, names.getPartitionPathString(partition_col, v)),
             True,
         )
+
+
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src.toString()} to {dst.toString()}")
 
 
 def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
@@ -139,13 +180,30 @@ def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
     maintaining partitions on it. Unlike ``upsert_partitioned`` this is
     a merge: a key the batch does not name is kept, never dropped.
 
-    The merged frame is localCheckpoint-ed before the write. A static
-    overwrite deletes the path it reads before its tasks run, so without
-    the cut the write fails with ``FAILED_READ_FILE.FILE_NOT_EXIST``."""
+    The merged rows are written (``write_parquet``, so sized by their
+    planned bytes) to a hidden sibling staging directory, which then
+    replaces the table by two Hadoop ``FileSystem`` renames: the table
+    moves aside, the staging directory moves in, and the aside copy is
+    deleted. The write reads the table and never deletes it, so a write
+    that fails leaves the table as it was, and no staging directory is
+    left behind. A crash between the two renames leaves the aside copy
+    and no table, and the next call on ``path`` restores the copy; a
+    crash after them leaves a stale aside copy, and the next call
+    deletes it. Both happen before the call reads the table."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
+    fs, root = _hadoop_fs(spark, path)
+    sibling = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    staging = sibling(root.getParent(), f".{root.getName()}.staging")
+    aside = sibling(root.getParent(), f".{root.getName()}.aside")
+    if fs.exists(aside):
+        if fs.exists(root):
+            fs.delete(aside, True)
+        else:
+            _rename(fs, aside, root)
+
     target = spark.read.parquet(path)
     merged = (
         target.withColumn("__batch", F.lit(0))
@@ -158,9 +216,14 @@ def upsert_unpartitioned(df: DataFrame, path: str, keys: list[str]) -> None:
         )
         .filter(F.col("__rn") == 1)
         .drop("__batch", "__rn")
-        .transform(cut_lineage_eager)
     )
-    merged.write.mode("overwrite").parquet(path)
+    try:
+        write_parquet(merged, staging.toString())
+        _rename(fs, root, aside)
+        _rename(fs, staging, root)
+    finally:
+        fs.delete(staging, True)
+    fs.delete(aside, True)
 
 
 def save_bucketed(

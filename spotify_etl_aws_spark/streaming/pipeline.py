@@ -138,7 +138,9 @@ def incremental_bronze(
     re-scan-and-INSERT loop).
 
     Each micro-batch checks the four tables for drift and appends to
-    them concurrently (``session.run_concurrently``); a table that
+    them concurrently (``session.run_concurrently``), each append sized
+    by its planned bytes (``sinks.write_parquet``), so a small batch
+    adds one file per table, not one per core; a table that
     fails does not stop the others, and the batch fails once all four
     have finished. Once per file holds for batches that succeed: a
     failed batch is not committed, so the next run replays it and the
@@ -146,6 +148,7 @@ def incremental_bronze(
     """
     from ..operators.shred import shred
     from ..schemas import RAW_PLAYLIST
+    from ..sources.sinks import write_parquet
 
     raw = (
         spark.readStream.schema(RAW_PLAYLIST)
@@ -181,7 +184,7 @@ def incremental_bronze(
                     _nullable_everywhere(landed_schema),
                     _nullable_everywhere(df.schema),
                 )
-            df.write.mode("append").parquet(path)
+            write_parquet(df, path, mode="append")
 
         # the four tables are independent: check and append them
         # concurrently. The pool threads inherit this callback's job

@@ -189,6 +189,61 @@ def test_build_job_count_and_no_cache_left(spark, tmp_path):
     assert set(sc._jsc.getPersistentRDDs().keySet()) - persisted_before == set()
 
 
+def _part_files(path: str) -> list[str]:
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def test_unpartitioned_tables_land_one_file_each(spark, tmp_path):
+    """Every bronze, silver and dim table of a build is far smaller than
+    ``spark.sql.files.maxPartitionBytes``, so each lands as one part
+    file: ``sinks.write_parquet`` sizes a write by the plan's bytes.
+    Spark alone writes one file per task, and the golden items landed
+    as four raw files (one playlist each) scan in four tasks."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    items = _playlist_items()
+    for k in range(4):
+        _write_playlists(str(raw / f"p{k}.json"), [_playlist(f"PL{k}", items[k::4])])
+    lake = str(tmp_path / "lake")
+    run_medallion(spark, str(raw), lake, validate=False)
+    tables = [f"{layer}/{t}" for layer in ("bronze", "silver") for t in BRONZE_TABLES]
+    tables += [f"gold/{name}" for name in ("dim_playlists", "dim_albums", "dim_artists")]
+    files = {t: len(_part_files(os.path.join(lake, t))) for t in tables}
+    assert files == {t: 1 for t in tables}
+
+
+def test_write_keeps_several_files_above_one_split(spark, tmp_path):
+    """The other side of the sizing rule: a frame whose planned bytes
+    span several read splits keeps several files. The same four-file
+    input lands as one file at the default split size, and as several
+    once ``spark.sql.files.maxPartitionBytes`` is below a third of it."""
+    from spotify_etl_aws_spark.sources.sinks import write_parquet
+
+    src = str(tmp_path / "src")
+    spark.range(20000).selectExpr("id", "CAST(id * 7 AS STRING) AS s").repartition(
+        4
+    ).write.parquet(src)
+    total = sum(os.path.getsize(os.path.join(src, f)) for f in _part_files(src))
+    write_parquet(spark.read.parquet(src), str(tmp_path / "one"))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(total // 3))
+    try:
+        write_parquet(spark.read.parquet(src), str(tmp_path / "several"))
+    finally:
+        spark.conf.set(key, old)
+    assert len(_part_files(src)) == 4
+    assert len(_part_files(str(tmp_path / "one"))) == 1
+    assert len(_part_files(str(tmp_path / "several"))) > 1
+    assert sorted(spark.read.parquet(str(tmp_path / "several")).collect()) == sorted(
+        spark.read.parquet(src).collect()
+    )
+    # a frame over an RDD has no size estimate and keeps its partitions
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(30)], 3)
+    write_parquet(spark.createDataFrame(rdd, "id long"), str(tmp_path / "unsized"))
+    assert len(_part_files(str(tmp_path / "unsized"))) == 3
+
+
 def _refresh_updates(spark, raw: str):
     """Gold-shaped update batches for every gold table, built from the
     raw landing the way a daily refresh builds them from its delta."""
@@ -203,15 +258,18 @@ def _refresh_updates(spark, raw: str):
 
 def test_refresh_job_count(spark, tmp_path, caplog):
     """Pin the refresh's job budget: upserting all four gold tables of
-    the golden lake and re-running the contract gate submits 26 jobs,
-    16 fewer than the 42 of the key merge and the per-check gate. The
-    fact replace is one schema read and one write, with no read of the
-    target, no window and no read-back schema inference; the gate is one
-    aggregate of 3 jobs instead of 13. The partitions written and
-    pruned come from ``Observation``s, and logging them (INFO is on
-    here) adds no job. The four tables are refreshed on pool threads; a
-    thread that lost the caller's job group would drop its jobs from
-    the count, and concurrency must not add a job either."""
+    the golden lake and re-running the contract gate submits 23 jobs.
+    The fact replace is one schema read and one write, with no read of
+    the target, no window and no read-back schema inference; the gate is
+    one aggregate of 3 jobs. Each dim upsert writes its merged rows to a
+    staging directory and renames it in, so it no longer materializes
+    them with a ``localCheckpoint`` first: 3 jobs fewer than the 26 of
+    the in-place overwrite, and the refresh persists no RDD. The
+    partitions written and pruned come from ``Observation``s, and
+    logging them (INFO is on here) adds no job.
+    The four tables are refreshed on pool threads; a thread that lost
+    the caller's job group would drop its jobs from the count, and
+    concurrency must not add a job either."""
     from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
 
     raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
@@ -219,6 +277,7 @@ def test_refresh_job_count(spark, tmp_path, caplog):
     run_medallion(spark, raw, lake, validate=False)
     updates = _refresh_updates(spark, raw)
     sc = spark.sparkContext
+    persisted_before = set(sc._jsc.getPersistentRDDs().keySet())
     group = "refresh-job-budget"
     sc.setJobGroup(group, "pin: gold refresh job count")
     try:
@@ -227,9 +286,58 @@ def test_refresh_job_count(spark, tmp_path, caplog):
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup(None, None)
-    assert len(jobs) == 26
+    assert len(jobs) == 23
+    assert set(sc._jsc.getPersistentRDDs().keySet()) - persisted_before == set()
     assert any(r.getMessage().startswith("gold refresh: 1 fact partitions") for r in caplog.records)
     assert landed["fact_playlist_tracks"].count() == N_TRACKS
+
+
+def test_failed_dim_upsert_keeps_the_landed_dim(spark, tmp_path, monkeypatch):
+    """A dim upsert whose write fails in its tasks leaves every gold
+    table as it was, row for row, and leaves no staging or aside
+    directory: the merged rows are written to a staging directory that
+    replaces the table only once it is complete. An in-place overwrite
+    deletes the table before its tasks run, so the same failure left no
+    table for the next read to infer a schema from. Re-running the
+    refresh with a good batch then succeeds."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql import functions as F
+
+    from spotify_etl_aws_spark.plans.medallion import refresh_gold_incremental
+
+    raw = _write_fixture(str(tmp_path / "raw.json"), _playlist_items())
+    lake = str(tmp_path / "lake")
+    run_medallion(spark, raw, lake, validate=False)
+    before = _gold_rows(lake)
+    gold_dir = os.path.join(lake, "gold")
+    tables = sorted(os.listdir(gold_dir))
+    artist = _artist(0)["id"]
+    batch = spark.createDataFrame(
+        [(artist, "Renamed Artist")], "artist_id string, artist_name string"
+    )
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(writer, path, *args, **kwargs):
+        # whatever directory the dim's rows are written to, its tasks fail
+        if "dim_artists" in path:
+            key = F.col("artist_id")
+            writer = writer._df.withColumn(
+                "artist_id",
+                F.when(key.isNotNull(), F.raise_error(F.lit("injected write failure"))).otherwise(key),
+            ).write.mode("overwrite")
+        return real_parquet(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(Exception, match="injected write failure"):
+        refresh_gold_incremental(spark, lake, {"dim_artists": batch})
+    monkeypatch.undo()
+    assert _gold_rows(lake) == before
+    assert sorted(os.listdir(gold_dir)) == tables
+
+    landed = refresh_gold_incremental(spark, lake, {"dim_artists": batch})
+    names = {r.artist_id: r.artist_name for r in landed["dim_artists"].collect()}
+    assert len(names) == N_ARTISTS and names[artist] == "Renamed Artist"
+    assert sorted(os.listdir(gold_dir)) == tables
 
 
 def test_refresh_leaves_session_conf_alone(spark, tmp_path, monkeypatch):

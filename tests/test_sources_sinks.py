@@ -14,6 +14,7 @@ from spotify_etl_aws_spark.sources.readers import load_table
 from spotify_etl_aws_spark.sources.rest import RestClient, ingest_playlists
 from spotify_etl_aws_spark.sources.sinks import (
     save_as_table,
+    upsert_unpartitioned,
     write_json,
     write_parquet,
     write_partitioned,
@@ -142,6 +143,40 @@ def test_sink_paths_are_scheme_generic(spark, sf_dir, tmp_path):
     ppath = f"viewfs://mocks3{tmp_path}/nation_s3_part"
     write_partitioned(nation, ppath, ["n_regionkey"])
     assert spark.read.parquet(ppath).count() == nation.count()
+    # the unpartitioned upsert's staging write and renames go through
+    # the same FileSystem API
+    renamed = nation.filter("n_nationkey = 0").withColumn("n_name", F.lit("RENAMED"))
+    upsert_unpartitioned(renamed, path, ["n_nationkey"])
+    back = spark.read.parquet(path)
+    assert back.count() == nation.count()
+    assert back.filter("n_name = 'RENAMED'").count() == 1
+
+
+def test_unpartitioned_upsert_finishes_a_swap_a_crash_cut_short(spark, tmp_path):
+    """The upsert swaps its staged rows in with two renames: the table
+    moves aside, then the staging directory moves in. A crash between
+    them leaves only the aside copy, and the next upsert restores it
+    before merging; a crash after them leaves a stale aside copy, and
+    the next upsert removes it. Neither leaves a sibling behind."""
+    import shutil
+
+    path = str(tmp_path / "dim")
+    aside = str(tmp_path / ".dim.aside")
+    schema = "k string, v long"
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    spark.createDataFrame([("a", 1), ("b", 2)], schema).write.parquet(path)
+    os.rename(path, aside)
+    upsert_unpartitioned(spark.createDataFrame([("b", 20)], schema), path, ["k"])
+    assert rows() == [("a", 1), ("b", 20)]
+    assert os.listdir(tmp_path) == ["dim"]
+
+    shutil.copytree(path, aside)
+    upsert_unpartitioned(spark.createDataFrame([("c", 3)], schema), path, ["k"])
+    assert rows() == [("a", 1), ("b", 20), ("c", 3)]
+    assert os.listdir(tmp_path) == ["dim"]
 
 
 def test_save_as_table_catalog_roundtrip(spark, sf_dir):
