@@ -2,19 +2,18 @@
 the audio half of the multimodal lane.
 
 Same design as the image codecs in ``operators/multimodal.py``: a REAL
-stdlib codec (RIFF/WAVE PCM — ``struct`` only, bit-exact round trips,
-closed-form file size for the analytic-oracle pattern), mapInPandas
-kernels for encode / metadata / feature extraction / resampling, and
-the same scale rules: bytes flow scan -> kernel -> sink, never through
-a shuffle; aggregate on the extracted METADATA frames.
+stdlib codec (RIFF/WAVE PCM — ``struct`` only, bit-exact round trips)
+that the audio fingerprint lane (``operators/audio_fp.py``) decodes
+inside its Arrow kernel, so bytes flow scan -> kernel and never
+through a shuffle.
 
 Compressed codecs (MP3/AAC/Opus) need libraries this container lacks —
 ``decode_audio`` raises ``NotImplementedError`` at the same seam where
 a real deployment would call ffmpeg/soundfile.
 
 The reference's domain is literally audio metadata (Spotify tracks:
-``duration_ms`` at `/root/reference/ingestion/ingestion/bronze/
-bronze.py:141`, preview/track URLs in ``models/model.py``) but it never
+``duration_ms`` at the reference's ``ingestion/ingestion/bronze/
+bronze.py:141``, preview/track URLs in ``models/model.py``) but it never
 touches samples; this lane is what carrying the media itself looks
 like.
 """
@@ -22,21 +21,9 @@ like.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-WAV_HEADER_BYTES = 44  # RIFF(12) + fmt chunk(24) + data header(8)
-
-
-def wav_n_bytes(n_samples: int, channels: int = 1) -> int:
-    """Exact byte size of ``encode_wav`` output: 44-byte canonical
-    header + 2 bytes per 16-bit sample per channel."""
-    return WAV_HEADER_BYTES + 2 * n_samples * channels
 
 
 class DecodedAudio(NamedTuple):
@@ -199,181 +186,3 @@ def decode_audio(data: bytes) -> DecodedAudio:
         )
     n = len(samples) // (2 * channels)
     return DecodedAudio(n, sample_rate, channels, samples[: 2 * n * channels])
-
-
-def encode_audio(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_samples_col: str = "n_samples",
-    rate_col: str = "sample_rate",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """(id, n_samples, sample_rate, payload) -> (id, audio binary):
-    the Arrow-batched encode kernel, mono PCM-16."""
-    schema = f"{id_col} bigint, audio binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "audio": [
-                        encode_wav(int(n), int(r), bytes(p))
-                        for n, r, p in zip(
-                            pdf[n_samples_col], pdf[rate_col], pdf[payload_col]
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, n_samples_col, rate_col, payload_col).mapInPandas(
-        gen, schema=schema
-    )
-
-
-def with_audio_meta(
-    df: DataFrame, id_col: str = "doc_id", audio_col: str = "audio"
-) -> DataFrame:
-    """Decode metadata + signal features out of the binary column in one
-    Arrow pass: (id, n_samples, sample_rate, channels, n_bytes,
-    duration_s, rms, peak). The binary column is dropped on the way out
-    so downstream shuffles never carry samples."""
-    schema = (
-        f"{id_col} bigint, n_samples bigint, sample_rate int, channels int, "
-        "n_bytes int, duration_s double, rms double, peak int"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[audio_col]):
-                d = decode_audio(bytes(b))
-                x = np.frombuffer(d.samples, dtype="<i2").astype(np.float64)
-                rows.append(
-                    (
-                        int(i),
-                        d.n_samples,
-                        d.sample_rate,
-                        d.channels,
-                        len(b),
-                        d.n_samples / d.sample_rate,
-                        float(np.sqrt((x**2).mean())) if len(x) else 0.0,
-                        int(np.abs(x).max()) if len(x) else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_samples", "sample_rate", "channels",
-                    "n_bytes", "duration_s", "rms", "peak",
-                ],
-            )
-
-    return df.select(id_col, audio_col).mapInPandas(gen, schema=schema)
-
-
-def resample_audio(
-    df: DataFrame,
-    target_rate: int,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-) -> DataFrame:
-    """Nearest-sample resampling to ``target_rate`` (the audio analogue
-    of the image lane's nearest-neighbor resize): decode -> index-map ->
-    re-encode PCM-16 at the target rate. Binary in, binary out, through
-    the same codec seam."""
-    if target_rate <= 0:
-        raise ValueError(f"target_rate must be positive, got {target_rate}")
-    schema = f"{id_col} bigint, {audio_col} binary"
-
-    def one(b: bytes) -> bytes:
-        d = decode_audio(bytes(b))
-        x = np.frombuffer(d.samples, dtype="<i2").reshape(d.n_samples, d.channels)
-        n_out = max(1, (d.n_samples * target_rate) // d.sample_rate)
-        idx = (np.arange(n_out) * d.n_samples) // n_out
-        out = x[idx]
-        return encode_wav(
-            n_out, target_rate, out.astype("<i2").tobytes(), channels=d.channels
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], audio_col: pdf[audio_col].map(one)}
-            )
-
-    return df.select(id_col, audio_col).mapInPandas(gen, schema=schema)
-
-
-def audio_quality_gate(
-    meta: DataFrame,
-    min_duration_s: float = 0.1,
-    min_rms: float = 1.0,
-) -> DataFrame:
-    """Filter decoded-audio metadata to clips that are long enough and
-    not digital silence — the audio analogue of the text quality gate.
-    Pure JVM expressions over the metadata frame."""
-    return meta.filter(
-        (F.col("duration_s") >= min_duration_s) & (F.col("rms") >= min_rms)
-    )
-
-
-def audio_embeddings(
-    df: DataFrame,
-    frames: int = 16,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-) -> DataFrame:
-    """(id, audio binary) -> (id, embedding array<float>): the
-    time-normalized energy-profile fingerprint — decode, mono-mix,
-    split the waveform into ``frames`` equal segments, take per-segment
-    log-RMS energy and zero-crossing rate, center each feature FAMILY
-    independently (the RMS scale would otherwise drown the ZCR block
-    and every clip would collapse toward one direction), then
-    L2-normalize the 2*frames vector. Duration- and sample-rate-invariant by
-    construction (segments are fractions of the clip), which is the
-    audio near-dup signal; a learned encoder (wav2vec-class) swaps in
-    at the same decode->vector seam. Unit-norm output feeds the vector
-    lanes directly."""
-    import numpy as np
-
-    if frames <= 0:
-        raise ValueError(f"frames must be positive, got {frames}")
-    schema = f"{id_col} bigint, embedding array<float>"
-
-    def one(b: bytes) -> list[float]:
-        d = decode_audio(bytes(b))
-        x = np.frombuffer(d.samples, dtype="<i2").astype(np.float64)
-        if d.channels > 1:
-            x = x[: len(x) - len(x) % d.channels]
-            x = x.reshape(-1, d.channels).mean(axis=1)
-        segs = np.array_split(x, frames)
-        feats = np.empty(2 * frames, dtype=np.float64)
-        for i, s in enumerate(segs):
-            if len(s) == 0:
-                feats[i] = feats[frames + i] = 0.0
-                continue
-            feats[i] = np.log1p(np.sqrt((s**2).mean()))
-            feats[frames + i] = (
-                float((np.signbit(s[1:]) != np.signbit(s[:-1])).mean())
-                if len(s) > 1
-                else 0.0
-            )
-        for half in (feats[:frames], feats[frames:]):
-            half -= half.mean()
-            hn = float(np.linalg.norm(half))
-            if hn > 0:
-                half /= hn
-        n = float(np.linalg.norm(feats))
-        return [float(v) for v in (feats / n if n > 0 else feats)]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [one(b) for b in pdf[audio_col]],
-                }
-            )
-
-    return df.select(id_col, audio_col).mapInPandas(gen, schema)

@@ -20,11 +20,11 @@ Spark shape — an INDEX-then-SEARCH split, mirroring the IVF posture:
   partial-aggregating shuffles over the exploded token stream (the
   explode itself is map-side; document text never shuffles — only
   (term, doc_id) pairs do).
-- ``save_bm25_index`` lands postings PARTITIONED BY a term-hash
-  bucket, so a query's ``bucket IN (...)`` filter becomes partition
-  pruning: a 3-term query over a P=256-bucket index reads ≤ 3/256 of
-  the postings bytes (plan-pinned in tests, same mechanism as the
-  IVF cell layout).
+- postings carry a term-hash ``bucket`` column; landed PARTITIONED BY
+  it, a query's ``bucket IN (...)`` filter becomes partition pruning:
+  a 3-term query over a P=256-bucket index reads ≤ 3/256 of the
+  postings bytes (plan-pinned in tests, same mechanism as the IVF
+  cell layout).
 - ``bm25_search`` scores one query: its terms are a driver-side
   literal (a query is human-sized), the scan prunes to their buckets,
   idf/length normalization are pure JVM expressions, and the top-k is
@@ -37,7 +37,6 @@ index build — model state, like a quantizer fit.
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -119,34 +118,6 @@ def bm25_index(
     return postings, doc_lens, stats
 
 
-def save_bm25_index(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    stats: Bm25Stats,
-    path: str,
-) -> None:
-    """Land the index with postings partitioned by term-hash bucket —
-    the layout that turns a query's bucket filter into partition
-    pruning. Stats persist as a one-row parquet (no sidecar formats)."""
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, "postings")
-    )
-    doc_lens.write.mode("overwrite").parquet(os.path.join(path, "doc_lens"))
-    spark = postings.sparkSession
-    spark.createDataFrame(
-        [(stats.n_docs, stats.avgdl)], "n_docs bigint, avgdl double"
-    ).write.mode("overwrite").parquet(os.path.join(path, "stats"))
-
-
-def load_bm25_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, Bm25Stats]:
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    doc_lens = spark.read.parquet(os.path.join(path, "doc_lens"))
-    row = spark.read.parquet(os.path.join(path, "stats")).collect()[0]
-    return postings, doc_lens, Bm25Stats(int(row.n_docs), float(row.avgdl))
-
-
 def _bm25_contrib(stats: Bm25Stats, k1: float, b: float):
     """Per-(term, doc) score contribution — the ONE place the Okapi
     formula lives; both the single-query and batch searches compose
@@ -200,58 +171,6 @@ def bm25_search(
         .agg(F.sum("__c").alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(topk)
-    )
-
-
-def bm25_search_many(
-    postings: DataFrame,
-    doc_lens: DataFrame,
-    stats: Bm25Stats,
-    queries: DataFrame,
-    topk: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    qid_col: str = "qid",
-    qtext_col: str = "query",
-) -> DataFrame:
-    """Top-k per query for a whole QUERY TABLE in one distributed job
-    — the shape batch workloads need (screening a corpus against
-    thousands of benchmark prompts, hybrid-retrieval candidate
-    generation). A driver loop over ``bm25_search`` would run one
-    Spark job per query; this runs ONE plan for all of them:
-
-    1. queries explode map-side into distinct (qid, term) pairs;
-    2. the pair table joins the postings on ``term`` — broadcast
-       EXPLICITLY (a derived table has no stats for Catalyst to see
-       it is small; query terms ≪ postings by contract), so the
-       postings never reshuffle for the term join; the later
-       hits ⋈ doc_lens join is left to AQE, whose runtime sizes see
-       that the filtered hits side became broadcastable;
-    3. per-(qid, doc) contributions aggregate, and the per-query
-       top-k is a ``row_number`` window over (qid) — partitioned by
-       query, never a global sort.
-
-    Returns (qid, doc_id, score, rank), rank 1 = best. Ties broken by
-    doc id for determinism (same contract as ``bm25_search``)."""
-    from pyspark.sql import Window
-
-    qt = queries.select(
-        F.col(qid_col),
-        F.explode(tokens(qtext_col)).alias("term"),
-    ).filter(F.col("term") != "").distinct()
-    contrib = _bm25_contrib(stats, k1, b)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.desc("score"), F.col(id_col)
-    )
-    return (
-        postings.join(F.broadcast(qt), "term")
-        .join(doc_lens, id_col)
-        .select(F.col(qid_col), F.col(id_col), contrib.alias("__c"))
-        .groupBy(qid_col, id_col)
-        .agg(F.sum("__c").alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
     )
 
 

@@ -157,25 +157,3 @@ def semantic_overlap(
             )
 
     return docs.select(id_col, vec_col).mapInPandas(gen, schema)
-
-
-def decontaminate_semantic(
-    docs: DataFrame,
-    bench: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
-    bench_vec_col: str | None = None,
-    max_bench: int = 1_000_000,
-) -> DataFrame:
-    """The corpus minus documents whose embedding lands within
-    ``threshold`` cosine of any benchmark embedding: one map-side
-    scoring pass + an id anti-join. NULL-scored docs (no usable
-    vector) survive — absence of evidence, as in ``decontaminate``'s
-    zero-overlap case."""
-    if not -1.0 <= threshold <= 1.0:
-        raise ValueError(f"threshold must be in [-1, 1], got {threshold}")
-    flagged = semantic_overlap(
-        docs, bench, id_col, vec_col, bench_vec_col, max_bench
-    ).filter(F.col("max_cosine") >= threshold)
-    return docs.join(flagged.select(id_col), id_col, "left_anti")

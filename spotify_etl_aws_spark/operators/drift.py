@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -166,6 +165,16 @@ def assert_no_breaking_drift(old: StructType, new: StructType) -> list[FieldChan
 
 
 def _nullable_everywhere(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the
+    normalization applied to BOTH sides at the append boundary
+    (``streaming/pipeline.py:incremental_bronze``). Spark reads parquet
+    as all-nullable while in-memory batches carry tighter non-null
+    schemas (literals, ``range`` ids), so required-ness comparison there
+    is pure noise — a stricter batch appends into a nullable table fine,
+    and an added column simply reads as NULL for historic rows.
+    Required-ness POLICY belongs to the declared-contract layer
+    (``assert_no_breaking_drift`` on explicit StructTypes, or the
+    quality contracts in ``operators/quality.py``)."""
     if isinstance(dt, StructType):
         return StructType(
             [
@@ -182,22 +191,3 @@ def _nullable_everywhere(dt: DataType) -> DataType:
             True,
         )
     return dt
-
-
-def drift_gate(spark, landed_path: str, batch: DataFrame) -> list[FieldChange]:
-    """The batch-boundary hook: compare an incoming batch's schema
-    against the already-landed parquet's (footer metadata only — no
-    data read) and refuse to append on breaking structural/type drift.
-
-    Nullability is normalized away on BOTH sides first: Spark reads
-    parquet as all-nullable while in-memory batches carry tighter
-    non-null schemas (literals, ``range`` ids), so required-ness
-    comparison at the append boundary is pure noise — a stricter batch
-    appends into a nullable table fine, and an added column simply
-    reads as NULL for historic rows. Required-ness POLICY belongs to
-    the declared-contract layer (``assert_no_breaking_drift`` on
-    explicit StructTypes, or the quality contracts in
-    ``operators/quality.py``). Returns the compatible-change list so
-    callers can log additive evolution."""
-    landed = _nullable_everywhere(spark.read.parquet(landed_path).schema)
-    return assert_no_breaking_drift(landed, _nullable_everywhere(batch.schema))

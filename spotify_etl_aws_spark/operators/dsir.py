@@ -27,11 +27,9 @@ Spark shape (the same three-posture split as the quality classifier,
   by fit and score, so the two can never disagree on buckets — the
   same reason the char-LM ships its counts into the kernel
   (``lm.py:61``).
-- **select** is either ``resample_dsir`` (exact top-k →
-  ``TakeOrderedAndProject``, for human-sized k) or
-  ``resample_dsir_fraction`` (approxQuantile threshold → map-side
-  filter — the 100 TB path, where k is billions and a global exact
-  top-k would range-shuffle the corpus).
+- **select** is ``resample_dsir_fraction`` (approxQuantile threshold
+  → map-side filter — the 100 TB path, where k is billions and a
+  global exact top-k would range-shuffle the corpus).
 
 The Gumbel noise is a deterministic function of (seed, doc_id) —
 xxhash64 → uniform in (0,1) → −log(−log u) — so a retried task, a
@@ -351,31 +349,6 @@ def _gumbel_key(
         raise ValueError(f"unknown gumbel hash method: {method}")
     u = (F.pmod(h, F.lit(_GUMBEL_M)) + F.lit(0.5)) / F.lit(float(_GUMBEL_M))
     return F.col(logw_col) + (-F.log(-F.log(u)))
-
-
-def resample_dsir(
-    scored: DataFrame,
-    n: int,
-    seed: str = "v1",
-    logw_col: str = "dsir_logw",
-    id_col: str = "doc_id",
-    gumbel_hash: str = "xxhash64",
-) -> DataFrame:
-    """Gumbel-top-k importance resample: the n rows with the largest
-    ``log w + Gumbel`` — equivalent to sampling n docs without
-    replacement with probability ∝ w. orderBy+limit, which the planner
-    runs as ``TakeOrderedAndProject`` (per-partition heaps of size n,
-    no global sort) — right for human-sized n; for corpus-sized n use
-    ``resample_dsir_fraction``."""
-    if n <= 0:
-        raise ValueError("n must be positive")
-    key = _gumbel_key(logw_col, id_col, seed, gumbel_hash)
-    return (
-        scored.withColumn("__k", key)
-        .orderBy(F.desc("__k"), F.col(id_col))
-        .limit(n)
-        .drop("__k")
-    )
 
 
 def resample_dsir_fraction(

@@ -17,18 +17,15 @@ Scale posture — every operator here is a MAP-SIDE projection:
   O(G log G) per doc, zero Exchange, embarrassingly parallel at 100 TB.
 - ``scrub_pii`` is a ``regexp_count`` + ``regexp_replace`` chain —
   JVM-side, codegen'd.
-- ``stratified_sample`` / ``domain_mix`` sample by HASH threshold
-  (``xxhash64``, same discipline as ``operators/splits.py``), not by
-  ``rand()``: a row's fate depends only on (id, salt), so samples are
-  reproducible across runs, cluster sizes, AND task retries — ``rand()``
-  sampling silently changes membership when a task is re-executed,
-  which at 1000-executor scale is a when, not an if. ``domain_mix``'s
-  only non-map step is one tiny per-domain count (model state, like a
-  quantizer fit) — that dict posture fits SOURCE-lane mixing (dozens
-  of lanes); for a web corpus keyed by registrable domain (~10^7
-  strata) use ``domain_mix_scaled`` / ``stratified_sample_rates``,
-  which keep the rate table as a DataFrame and apply it with a
-  broadcast join — no driver dict, no O(#domains) expression chain.
+- ``stratified_sample_rates`` / ``domain_mix_scaled`` sample by HASH
+  threshold (``xxhash64``, same discipline as ``operators/splits.py``),
+  not by ``rand()``: a row's fate depends only on (id, salt), so
+  samples are reproducible across runs, cluster sizes, AND task
+  retries — ``rand()`` sampling silently changes membership when a task
+  is re-executed, which at 1000-executor scale is a when, not an if.
+  They keep the rate table as a DataFrame and apply it with a broadcast
+  join — no driver dict, no O(#domains) expression chain, so a web
+  corpus keyed by registrable domain (~10^7 strata) fits.
 """
 
 from __future__ import annotations
@@ -338,70 +335,6 @@ def scrub_pii(
 # ------------------------------------------------------- hash sampling
 
 
-def stratified_sample(
-    df: DataFrame,
-    fractions: dict[str, float],
-    strata_col: str,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> DataFrame:
-    """Keep a deterministic per-stratum fraction of rows.
-
-    Hash-threshold sampling (``pmod(xxhash64(salt, id), B) < frac*B``):
-    reproducible under retries and corpus growth, map-side only (no
-    Exchange — pinned in tests). Strata absent from ``fractions`` are
-    dropped; fractions outside [0, 1] raise."""
-    for k, v in fractions.items():
-        if not 0.0 <= v <= 1.0:
-            raise ValueError(f"fraction for {k!r} must be in [0,1], got {v}")
-    bucket = F.pmod(F.xxhash64(F.lit(salt), F.col(id_col)), F.lit(_BUCKETS))
-    keep = F.lit(False)
-    for name, frac in fractions.items():
-        keep = keep | (
-            (F.col(strata_col) == name) & (bucket < int(round(frac * _BUCKETS)))
-        )
-    return df.filter(keep)
-
-
-def domain_mix(
-    df: DataFrame,
-    domain_col: str,
-    temperature: float = 1.0,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> tuple[DataFrame, dict[str, float]]:
-    """Temperature-based domain re-weighting by downsampling.
-
-    Target shares q_d ∝ p_d^temperature (T=1 keeps the natural mix,
-    T=0 equalizes domains, 0<T<1 flattens — the standard multilingual /
-    multi-source mixing rule). Rates r_d = (q_d / p_d) / max(q/p) are
-    downsample-only (the largest relative upweight keeps 100%; nothing
-    is duplicated). Returns (sampled df, rate per domain).
-
-    The per-domain count is the one non-map step — O(#domains) driver
-    state, the same posture as a quantizer fit. That bounds this
-    function to SOURCE-lane mixing (dozens of strata); for registrable-
-    domain mixing over a web corpus use ``domain_mix_scaled``."""
-    if temperature < 0:
-        raise ValueError(f"temperature must be >= 0, got {temperature}")
-    counts = {
-        r["d"]: r["n"]
-        for r in df.groupBy(F.col(domain_col).alias("d"))
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    total = sum(counts.values())
-    if not total:
-        return df, {}
-    shares = {d: n / total for d, n in counts.items()}
-    targets = {d: p**temperature for d, p in shares.items()}
-    tsum = sum(targets.values())
-    rel = {d: (targets[d] / tsum) / shares[d] for d in shares}
-    peak = max(rel.values())
-    rates = {d: r / peak for d, r in rel.items()}
-    return stratified_sample(df, rates, domain_col, id_col, salt), rates
-
-
 def stratified_sample_rates(
     df: DataFrame,
     rates: DataFrame,
@@ -410,19 +343,16 @@ def stratified_sample_rates(
     salt: str = "v1",
     rate_col: str = "rate",
 ) -> DataFrame:
-    """``stratified_sample`` with the rate table as a DATAFRAME — the
-    web-scale path (~10^7 registrable-domain strata, where a driver
-    dict / per-stratum expression chain cannot exist).
+    """Deterministic per-stratum hash sampling with the rate table as a
+    DATAFRAME — the web-scale path (~10^7 registrable-domain strata,
+    where a driver dict / per-stratum expression chain cannot exist).
 
     ``rates`` carries one row per stratum (``strata_col``,
     ``rate_col`` in [0, 1]); it is broadcast-joined onto ``df`` (inner
-    join — strata absent from ``rates`` are dropped, matching the dict
-    variant), then the same deterministic hash threshold keeps
-    ``pmod(xxhash64(salt, id), B) < round(rate*B)``. The corpus side
-    never shuffles: a broadcast hash join is map-side. Same sampling
-    decision per row as the dict variant at equal rates (identical
-    bucket hash and rounding), so the two variants agree row-for-row.
-    Out-of-range rates surface as a loud runtime failure rather than a
+    join — strata absent from ``rates`` are dropped), then a
+    deterministic hash threshold keeps
+    ``pmod(xxhash64(salt, id), B) < bround(rate*B)``. The corpus side
+    never shuffles: a broadcast hash join is map-side. Out-of-range rates surface as a loud runtime failure rather than a
     silent over-sample (raise_error branch, checked per row on the
     broadcast-small rate table)."""
     checked = F.when(
@@ -438,8 +368,7 @@ def stratified_sample_rates(
         F.col(strata_col), checked.alias("__rate")
     )
     bucket = F.pmod(F.xxhash64(F.lit(salt), F.col(id_col)), F.lit(_BUCKETS))
-    # bround = HALF_EVEN, matching the dict variant's Python round()
-    # (banker's) so the two variants agree even at .5-midpoint rates
+    # bround = HALF_EVEN (banker's rounding) at .5-midpoint rates
     return (
         df.join(F.broadcast(rt), strata_col, "inner")
         .filter(bucket < F.bround(F.col("__rate") * _BUCKETS).cast("long"))
@@ -454,12 +383,12 @@ def domain_mix_scaled(
     id_col: str = "doc_id",
     salt: str = "v1",
 ) -> tuple[DataFrame, DataFrame]:
-    """``domain_mix`` for web-scale stratum cardinality: the rate table
-    lives as a DataFrame end-to-end, never as a driver dict.
+    """Temperature domain mixing at web-scale stratum cardinality: the
+    rate table lives as a DataFrame end-to-end, never as a driver dict.
 
-    Same math as ``domain_mix`` (q_d ∝ p_d^T, downsample-only rates
-    normalized by the peak relative upweight), restructured so driver
-    state is THREE scalars instead of O(#domains):
+    Target shares q_d ∝ p_d^T (T=1 keeps the natural mix, T=0 equalizes
+    domains) become downsample-only rates normalized by the peak
+    relative upweight. Driver state is THREE scalars, not O(#domains):
 
     1. per-domain counts: one partial-aggregating shuffle, kept
        distributed (cached — it feeds two scalar aggs and the rate
@@ -473,8 +402,7 @@ def domain_mix_scaled(
        shuffles).
 
     Returns (sampled df, rates DataFrame with columns [domain_col,
-    rate]). At dozens of strata ``domain_mix`` gives the same rows
-    (same hash, same rounding) with a simpler plan."""
+    rate])."""
     if temperature < 0:
         raise ValueError(f"temperature must be >= 0, got {temperature}")
     counts = (
@@ -530,8 +458,8 @@ def unimax_allocation(
     total capacity < budget (then every stratum just gets its cap).
 
     Driver-side O(#strata log #strata) — strata here are languages or
-    source lanes (dozens to hundreds), the same model-state posture as
-    ``domain_mix``; this is NOT a per-registrable-domain tool."""
+    source lanes (dozens to hundreds), model state like a quantizer
+    fit; this is NOT a per-registrable-domain tool."""
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
     if max_epochs <= 0:
@@ -550,68 +478,3 @@ def unimax_allocation(
         rem_budget -= take
         rem -= 1
     return alloc
-
-
-def unimax_mix(
-    df: DataFrame,
-    strata_col: str,
-    budget: float,
-    max_epochs: float = 4.0,
-    weight_col: str | None = None,
-    id_col: str = "doc_id",
-    salt: str = "v1",
-) -> tuple[DataFrame, dict[str, float]]:
-    """Materialize the UniMax mixture: every document of stratum ``l``
-    appears ``floor(r_l)`` times plus once more for a deterministic
-    ``frac(r_l)`` hash-sampled subset, where ``r_l = alloc_l /
-    count_l`` ∈ [0, max_epochs] is the stratum's epoch rate. Unlike
-    ``domain_mix`` (downsample-only), UniMax UPWEIGHTS small strata by
-    repetition — the output carries an ``epoch: int`` column (0-based
-    copy index) so downstream training-order shuffling (``ordering.py``)
-    can interleave copies instead of replaying them back-to-back.
-
-    ``weight_col`` (e.g. a token count) makes both the budget and the
-    caps token-denominated; row-denominated otherwise. The realized
-    token total matches the allocation exactly when per-doc weights
-    are uniform within a stratum, and to sampling accuracy (the
-    fractional epoch is a per-DOC hash threshold, same family as
-    ``stratified_sample``) when they vary.
-
-    Strata counts collect to an O(#strata) driver dict — source/
-    language-lane cardinality by contract (see ``unimax_allocation``).
-    The copy fan-out itself is map-side: rates broadcast-join onto the
-    corpus and ``explode(sequence(...))`` runs per row, no Exchange on
-    the corpus side."""
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    counts = {
-        r["s"]: float(r["n"])
-        for r in df.groupBy(F.col(strata_col).alias("s"))
-        .agg(F.sum(w).alias("n"))
-        .collect()
-    }
-    if not counts:
-        return df.withColumn("epoch", F.lit(0)).limit(0), {}
-    alloc = unimax_allocation(counts, budget, max_epochs)
-    rates = {
-        lang: (alloc[lang] / counts[lang]) if counts[lang] else 0.0
-        for lang in counts
-    }
-    spark = df.sparkSession
-    rt = spark.createDataFrame(
-        [(lang, float(r)) for lang, r in rates.items()],
-        f"{strata_col} string, __rate double",
-    )
-    bucket = F.pmod(F.xxhash64(F.lit(salt), F.col(id_col)), F.lit(_BUCKETS))
-    n_full = F.floor("__rate").cast("int")
-    frac = F.col("__rate") - F.floor("__rate")
-    in_partial = bucket < F.bround(frac * _BUCKETS).cast("long")
-    n_copies = n_full + F.when(in_partial, 1).otherwise(0)
-    copies = F.when(
-        n_copies > 0, F.sequence(F.lit(0), n_copies - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    out = (
-        df.join(F.broadcast(rt), strata_col, "inner")
-        .withColumn("epoch", F.explode(copies))
-        .drop("__rate")
-    )
-    return out, rates

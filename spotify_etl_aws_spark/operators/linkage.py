@@ -174,8 +174,7 @@ def block_census(
     """Diagnostic: (pass_idx, block_key, n_probe, n_master, pairs) for
     every block key present on BOTH sides of each blocking pass,
     descending by candidate pair mass — the skew census a caller reads
-    before picking ``max_block_pairs`` (the linkage twin of
-    ``operators/phash.py:band_bucket_sizes``)."""
+    before picking ``max_block_pairs``."""
     if not blocking:
         raise ValueError("block_census: at least one blocking pass required")
     p = _prefixed(probe, probe_id, "p")

@@ -1,20 +1,18 @@
 """Character n-gram language-model quality scoring (north-star,
-SURVEY.md §2.11c) — the CCNet-style perplexity filter: train a small
-LM on a trusted corpus, score candidate documents by perplexity, and
-gate out the tail (gibberish, boilerplate, wrong-domain text score
-high; fluent in-domain text scores low).
+SURVEY.md §2.11c) — the CCNet-style perplexity filter: score
+candidate documents by perplexity under a small LM fitted on a trusted
+corpus, and gate out the tail (gibberish, boilerplate, wrong-domain
+text score high; fluent in-domain text scores low).
 
-Scalable shape, mirroring ``operators/bpe.py``: the corpus-sized work
-is ONE n-gram counting job per order (explode via a JVM ``transform``
-over ``sequence`` — no UDF — then a partial-agg shuffle, capped top-K
-with deterministic ties = the pruned-LM posture KenLM uses); the model
-is O(K) driver state shipped to executors in the scoring kernel's
-closure. Scoring is map-side only — document text never shuffles.
+The model (``CharLmModel``) is pruned n-gram and context counts —
+O(K) driver state, the pruned-LM posture KenLM uses — shipped to
+executors in the scoring kernel's closure. Scoring is map-side only —
+document text never shuffles.
 
 CCNet proper uses a 5-gram KenLM over SentencePiece tokens; the
 simplification here is character trigrams with add-alpha smoothing,
 which keeps every piece library-free while preserving the pipeline
-shape (train on clean -> score -> threshold).
+shape (fit on clean -> score -> threshold).
 """
 
 from __future__ import annotations
@@ -28,22 +26,11 @@ from pyspark.sql import functions as F
 
 
 def _norm_text(text_col: str) -> Column:
-    """Lowercase + whitespace-collapse, the shared normalization for
-    training and scoring (mismatched normalization is the classic LM
-    deployment bug)."""
+    """Lowercase + whitespace-collapse, the normalization the model's
+    counts and the scored text must share (mismatched normalization is
+    the classic LM deployment bug)."""
     return F.trim(
         F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    )
-
-
-def _char_ngrams(text_col: str, n: int) -> Column:
-    """array<string> of every length-``n`` character window — pure JVM:
-    transform(sequence(...)) over substring, no Python in the scan."""
-    t = _norm_text(text_col)
-    m = F.greatest(F.length(t) - F.lit(n - 1), F.lit(0))
-    return F.transform(
-        F.sequence(F.lit(1), m),
-        lambda i: F.substring(t, i, n),
     )
 
 
@@ -56,40 +43,6 @@ class CharLmModel(NamedTuple):
     context_counts: dict[str, int]
     n_chars: int
     alpha: float
-
-
-def _count_grams(
-    docs: DataFrame, text_col: str, n: int, top_k: int
-) -> dict[str, int]:
-    rows = (
-        docs.select(F.explode(_char_ngrams(text_col, n)).alias("g"))
-        .groupBy("g")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("g"))
-        .limit(top_k)
-        .collect()
-    )
-    return {r["g"]: r["n"] for r in rows}
-
-
-def train_char_lm(
-    docs: DataFrame,
-    text_col: str = "text",
-    order: int = 3,
-    top_k: int = 200_000,
-    alpha: float = 0.1,
-) -> CharLmModel:
-    """Fit the pruned character LM on a (trusted) corpus: one counting
-    job at order ``n`` and one at ``n-1`` (the contexts), each capped
-    at the ``top_k`` most frequent grams (count desc, gram asc — the
-    cut is deterministic). Alphabet size for smoothing comes from the
-    unigram job when order is 2, else from a third tiny count."""
-    if order < 2:
-        raise ValueError(f"order must be >= 2, got {order}")
-    ngrams = _count_grams(docs, text_col, order, top_k)
-    contexts = _count_grams(docs, text_col, order - 1, top_k)
-    n_chars = len(_count_grams(docs, text_col, 1, top_k)) or 1
-    return CharLmModel(order, ngrams, contexts, n_chars, alpha)
 
 
 def _doc_log_ppl(text: str, m: CharLmModel) -> float | None:
@@ -118,11 +71,11 @@ def score_perplexity(
     text_col: str = "text",
     out_col: str = "log_ppl",
 ) -> DataFrame:
-    """Append ``out_col: double`` — log2-perplexity under the trained
-    model. Map-side pandas kernel; the pruned count tables ride the
-    closure (O(top_k)); normalization matches training exactly because
-    both run ``_norm_text`` (the JVM side normalizes, the kernel only
-    walks windows)."""
+    """Append ``out_col: double`` — log2-perplexity under ``model``.
+    Map-side pandas kernel; the pruned count tables ride the closure;
+    the JVM side normalizes (``_norm_text``: lowercase, whitespace
+    collapsed and trimmed), the kernel only walks windows, so the
+    model's counts must come from text normalized the same way."""
 
     @F.pandas_udf("double")
     def ppl(texts: pd.Series) -> pd.Series:

@@ -1,7 +1,7 @@
 """Multimodal (binary) column operators (north-star, SURVEY.md §2.11d).
 
 The reference carries image columns only as URLs in its declared models
-(``/root/reference/models/model.py:10,19`` image_url/cover_image_url;
+(the reference's ``models/model.py:10,19`` image_url/cover_image_url;
 the raw playlist JSON has ``images[]``). A 100 TB training-data lake
 carries the media itself: an opaque ``binary`` column plus a typed
 metadata struct, with decode / feature-extraction running as
@@ -17,13 +17,13 @@ is true nearest-neighbor resampling over the decoded pixel grid for
 all three. Progressive JPEG / arithmetic coding raise
 ``NotImplementedError`` at the same seam — swap in PIL/torchvision
 there in a real deployment. A legacy deterministic fake
-(``IMG:<w>:<h>:`` header + 16-byte payload) is kept as a fallback so
-the plumbing can be exercised with zero codec cost.
+(``IMG:<w>:<h>:`` header + 16-byte payload) still parses and resizes
+as a fallback.
 
 The PNG encoder emits zlib level-0 (stored) IDAT blocks, so the exact
 file size is a closed-form function of (width, height) — which is what
 lets the DuckDB oracle recompute ``n_bytes`` analytically and the hash
-gate prove the bytes really are well-formed PNGs (``png_n_bytes``).
+gate prove the bytes really are well-formed PNGs.
 
 Scale notes: mapInPandas streams Arrow batches — memory is bounded by
 batch size regardless of table size, the right lane for per-item C
@@ -40,11 +40,10 @@ from collections.abc import Iterator
 from typing import NamedTuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MEDIA_MAGIC = "IMG"
-PAYLOAD_BYTES = 16  # md5 digest length
 
 BMP_HEADER_BYTES = 54  # BITMAPFILEHEADER (14) + BITMAPINFOHEADER (40)
 
@@ -87,20 +86,6 @@ def encode_bmp(width: int, height: int, payload: bytes) -> bytes:
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 JPEG_SIG = b"\xff\xd8"
-_PNG_STORED_BLOCK = 65535  # max stored-block payload in DEFLATE
-
-
-def png_n_bytes(width: int, height: int) -> int:
-    """Exact byte size of ``encode_png(width, height, ...)`` output.
-
-    Closed-form because the IDAT stream uses zlib level 0: stored
-    DEFLATE blocks are 2 (zlib header) + 5 per block + raw + 4 (adler),
-    and raw = height * (1 + 3*width) filtered scanline bytes. File =
-    8 (signature) + 25 (IHDR chunk) + 12 + idat + 12 (IEND)."""
-    raw = height * (1 + 3 * width)
-    nblocks = max(1, (raw + _PNG_STORED_BLOCK - 1) // _PNG_STORED_BLOCK)
-    idat = 2 + 5 * nblocks + raw + 4
-    return 8 + 25 + (12 + idat) + 12
 
 
 def _png_chunk(tag: bytes, data: bytes) -> bytes:
@@ -116,7 +101,9 @@ def encode_png(width: int, height: int, payload: bytes) -> bytes:
     """A REAL truecolor 8-bit PNG file (stdlib ``zlib`` only): proper
     signature, IHDR/IDAT/IEND chunks with CRC32s, filter byte 0 per
     scanline, and a genuine zlib stream — level 0 (stored blocks) so
-    the output size is deterministic and closed-form (``png_n_bytes``).
+    the output size is deterministic and closed-form: 8 (signature) +
+    25 (IHDR) + 12 + idat + 12 (IEND), idat = 2 + 5 per stored block +
+    height * (1 + 3*width) + 4.
     ``payload`` fills the RGB pixel buffer (repeated / truncated), so an
     exactly-sized buffer round-trips pixels bit-for-bit."""
     if width <= 0 or height <= 0:
@@ -293,23 +280,6 @@ class DecodedImage(NamedTuple):
     mode: str
     pixels: bytes
 
-# Deterministic fake dimensions (any stand-in works; these keep the
-# oracle analytic): width/height are affine in doc_id.
-WIDTH_BASE, WIDTH_MULT, WIDTH_MOD = 64, 7, 512
-HEIGHT_BASE, HEIGHT_MULT, HEIGHT_MOD = 48, 13, 384
-
-
-def fake_image_bytes(id_col: Column, payload_src: Column) -> Column:
-    """JVM-side synthetic media: ``IMG:<w>:<h>:`` header + 16 payload
-    bytes (md5 of the source column). Stands in for real image bytes so
-    the binary-column plumbing is exercised without a codec library."""
-    w = (F.lit(WIDTH_BASE) + (id_col * WIDTH_MULT) % WIDTH_MOD).cast("int")
-    h = (F.lit(HEIGHT_BASE) + (id_col * HEIGHT_MULT) % HEIGHT_MOD).cast("int")
-    header = F.concat_ws(
-        ":", F.lit(MEDIA_MAGIC), w.cast("string"), h.cast("string"), F.lit("")
-    )
-    return F.concat(header.cast("binary"), F.unhex(F.md5(payload_src)))
-
 
 def decode_image(data: bytes) -> DecodedImage:
     """REAL image decode, dispatched on the file magic: uncompressed
@@ -389,39 +359,6 @@ def _parse_one(b: bytes) -> tuple[str, int, int, int]:
     return magic.decode("ascii").lower(), int(w), int(h), len(b)
 
 
-def encode_media_bmp(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    width_col: str = "width",
-    height_col: str = "height",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Encode real BMP media via mapInPandas: (id, width, height,
-    payload) -> (id, media binary). This is the encode half of the codec
-    seam — the same Arrow-batched lane a PIL/ffmpeg encoder runs in, but
-    with the stdlib BMP writer, so the bytes leaving the kernel are a
-    genuine image file format."""
-    schema = f"{id_col} bigint, media binary"
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "media": [
-                        encode_bmp(int(w), int(h), bytes(p))
-                        for w, h, p in zip(
-                            pdf[width_col], pdf[height_col], pdf[payload_col]
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, payload_col).mapInPandas(
-        _encode, schema=schema
-    )
-
-
 def _encode_jpeg(width: int, height: int, payload: bytes) -> bytes:
     from spotify_etl_aws_spark.operators.jpeg import encode_jpeg
 
@@ -454,8 +391,8 @@ def encode_media(
 ) -> DataFrame:
     """Mixed-format media encode via mapInPandas: (id, width, height,
     payload, fmt) -> (id, media binary), dispatching per row on ``fmt``
-    ('bmp' | 'png' | 'jpeg'). Same Arrow-batched lane as ``encode_media_bmp``,
-    with the per-item codec chosen by a column — the shape a real
+    ('bmp' | 'png' | 'jpeg'), the per-item codec chosen by a column —
+    the same Arrow-batched lane a PIL/ffmpeg encoder runs in, and the shape a real
     corpus has, where media formats are heterogeneous within one
     table."""
     schema = f"{id_col} bigint, media binary"
@@ -585,70 +522,3 @@ def media_features(meta: DataFrame) -> DataFrame:
         .otherwise(F.lit("portrait"))
         .alias("orientation"),
     )
-
-
-def image_embeddings(
-    df: DataFrame,
-    grid: int = 4,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-) -> DataFrame:
-    """(id, media binary) -> (id, embedding array<float>): the
-    block-mean thumbnail fingerprint — decode, average the pixels of a
-    ``grid``x``grid`` cell lattice per channel, center and L2-normalize
-    the 3*grid^2 vector. Stable under re-encoding (BMP/PNG/JPEG of the
-    same frame land near each other) and resizing, which is exactly
-    the image near-dup signal; dot products are cosines, so the output
-    plugs straight into the vector lanes (cosine top-k, IVF,
-    ``dedup_embedding_cosine``). A learned encoder (CLIP-class) swaps
-    in at this kernel's decode->vector seam; the Spark plumbing —
-    binary in, unit vector out, bytes never shuffle — is identical.
-    """
-    if grid <= 0:
-        raise ValueError(f"grid must be positive, got {grid}")
-    schema = f"{id_col} bigint, embedding array<float>"
-
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [
-                        [float(x) for x in blockmean_vector(bytes(b), grid)]
-                        for b in pdf[media_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, media_col).mapInPandas(_embed, schema)
-
-
-def blockmean_vector(data: bytes, grid: int = 4):
-    """Decode an image and return its unit-norm block-mean vector
-    (numpy, 3*grid^2 floats) — the kernel behind ``image_embeddings``,
-    exposed so the video lane can pool it over sampled frames."""
-    import numpy as np
-
-    img = decode_image(data)
-    px = np.frombuffer(img.pixels, dtype=np.uint8).reshape(
-        img.height, img.width, 3
-    ).astype(np.float64)
-    if img.mode == "BGR":
-        px = px[:, :, ::-1]
-    # images smaller than the grid (1x1 tracking pixels, tiny GIFs)
-    # would hand array_split empty cells whose mean is NaN — upsample
-    # by pixel repetition first (nearest-neighbor semantics, identical
-    # block means for normal-size images)
-    if px.shape[0] < grid:
-        px = np.repeat(px, -(-grid // px.shape[0]), axis=0)
-    if px.shape[1] < grid:
-        px = np.repeat(px, -(-grid // px.shape[1]), axis=1)
-    rows = np.array_split(px, grid, axis=0)
-    v = np.empty((grid, grid, 3), dtype=np.float64)
-    for i, r in enumerate(rows):
-        for j, cell in enumerate(np.array_split(r, grid, axis=1)):
-            v[i, j] = cell.mean(axis=(0, 1))
-    flat = (v / 255.0).reshape(-1)
-    flat = flat - flat.mean()
-    n = float(np.linalg.norm(flat))
-    return flat / n if n > 0 else flat

@@ -1,8 +1,8 @@
 """Training-order operators (north-star, SURVEY.md §2.11c): the step
 between a curated corpus and the trainer's data loader — a
-DETERMINISTIC global shuffle (epoch reproducibility, retry stability)
-and domain interleaving (so a domain-grouped corpus doesn't feed the
-model one domain at a time).
+DETERMINISTIC global shuffle (epoch reproducibility, retry stability),
+token-balanced shard assignment over it, and budget-bounded sequence
+packing.
 
 Same determinism doctrine as ``operators/splits.py``: ordering keys
 are ``xxhash64(seed, id)`` — pure map-side expressions, reproducible
@@ -18,7 +18,7 @@ prior epoch order prefixes-modulo-insertions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from .lineage import cut_lineage_eager
 
@@ -26,35 +26,6 @@ from .lineage import cut_lineage_eager
 def order_key(seed: int, id_col: str = "doc_id"):
     """The deterministic shuffle key: xxhash64(seed, id)."""
     return F.xxhash64(F.lit(seed), F.col(id_col))
-
-
-def training_order(
-    df: DataFrame, seed: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Rows in deterministic pseudo-random order for epoch ``seed``
-    (ties on the hash broken by id, so the order is total)."""
-    return df.orderBy(order_key(seed, id_col), F.col(id_col))
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    seed: int,
-    num_shards: int = 32,
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize the epoch order as ``num_shards`` parquet files a
-    sequential reader can stream in order: one range shuffle on the
-    hash key (balanced shards), sorted within shards, key dropped."""
-    key = order_key(seed, id_col).alias("__order")
-    (
-        df.withColumn("__order", key)
-        .repartitionByRange(num_shards, "__order")
-        .sortWithinPartitions("__order", id_col)
-        .drop("__order")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 def assign_token_shards(
@@ -71,9 +42,8 @@ def assign_token_shards(
     where ``cum_before`` is the exact number of tokens preceding it in
     training order — so every shard except the last carries
     ``shard_tokens ± max_doc_tokens`` tokens, the even-work contract a
-    trainer's data loader wants (``write_training_shards`` balances by
-    ROWS, which skews by an order of magnitude when document lengths
-    do).
+    trainer's data loader wants (balancing by ROWS skews by an order of
+    magnitude when document lengths do).
 
     Scale shape: the global running sum never runs on one partition.
     The epoch-ordered frame is range-partitioned and localCheckpoint-ed
@@ -213,25 +183,4 @@ def pack_sequences(
         .withColumn("doc_offset", chunk_start - F.col("__cum"))
         .withColumn("n_in_seq", chunk_end - chunk_start)
         .drop("__order", "__pid", "__cum")
-    )
-
-
-def interleave_domains(
-    df: DataFrame,
-    domain_col: str,
-    seed: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Round-robin the domains: row r of every domain (in per-domain
-    deterministic shuffle order) sorts before row r+1 of any domain, so
-    a batch reader sees domains interleaved as evenly as their sizes
-    allow instead of one domain's documents in a run. One window
-    shuffle on the domain key + the final order."""
-    w = Window.partitionBy(domain_col).orderBy(
-        order_key(seed, id_col), F.col(id_col)
-    )
-    return (
-        df.withColumn("__rr", F.row_number().over(w))
-        .orderBy("__rr", order_key(seed, id_col), F.col(id_col))
-        .drop("__rr")
     )

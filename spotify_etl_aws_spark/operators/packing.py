@@ -108,16 +108,3 @@ def pack_sequences(
         "__shard", F.floor(F.col("__id") / shard_span)
     )
     return sharded.groupBy(*keys).applyInPandas(pack_shard, PACK_SCHEMA)
-
-
-def pack_stats(packed: DataFrame, budget: int) -> DataFrame:
-    """Per-pack fill statistics — the waste accounting every packing
-    run should publish: (pack_id, n_docs, pack_tokens, fill_ratio)."""
-    return (
-        packed.groupBy("pack_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("pack_tokens"),
-        )
-        .withColumn("fill_ratio", F.round(F.col("pack_tokens") / budget, 4))
-    )

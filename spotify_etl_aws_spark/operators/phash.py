@@ -31,10 +31,11 @@ Scale shape (the point of the design):
   image shares) are the skew risk at corpus scale — the same shape as
   the edit-distance segment join's replica families. The operator
   exposes ``max_band_bucket``: band buckets larger than the cap are
-  dropped from CANDIDATE GENERATION only, loudly countable by the
-  caller via ``band_bucket_sizes`` (a dropped bucket weakens recall
-  for near-flat images but never produces a wrong pair; exact-verify
-  still gates everything emitted). Default None = exact recall.
+  dropped from CANDIDATE GENERATION only, countable by the caller as
+  a (band, band_val) count over ``band_buckets`` (a dropped bucket
+  weakens recall for near-flat images but never produces a wrong pair;
+  exact-verify still gates everything emitted). Default None = exact
+  recall.
 """
 
 from __future__ import annotations
@@ -559,21 +560,4 @@ def hamming_near_pairs_wide(
         .join(hb, "id_b")
         .select("id_a", "id_b", hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_distance)
-    )
-
-
-def band_bucket_sizes(
-    hashes: DataFrame,
-    id_col: str = "doc_id",
-    hash_col: str = "phash",
-    bits: int = HASH_BITS,
-    bands: int = 8,
-) -> DataFrame:
-    """Diagnostic: (band, band_val, n) bucket sizes, descending — the
-    skew census a caller reads before picking ``max_band_bucket``."""
-    return (
-        band_buckets(hashes, id_col, hash_col, bits, bands)
-        .groupBy("band", "band_val")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"))
     )

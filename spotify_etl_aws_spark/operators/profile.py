@@ -44,30 +44,6 @@ def stack_carriers(
     )
 
 
-def profile_completeness(
-    df: DataFrame,
-    carriers: dict[str, Column],
-    approx_rsd: float | None = None,
-) -> DataFrame:
-    """Per-column completeness + cardinality in one stacked pass:
-    (col_name, n_rows, n_null, n_distinct). ``carriers`` map column
-    names to INJECTIVE string expressions. ``approx_rsd`` swaps the
-    exact distinct count for approx_count_distinct at that relative
-    standard deviation — the 100 TB posture (sketch-valued: gate it
-    behind an error-bound contract, not a value hash)."""
-    stacked = stack_carriers(df, carriers, "string")
-    distinct = (
-        F.approx_count_distinct("val", approx_rsd)
-        if approx_rsd is not None
-        else F.count_distinct("val")
-    )
-    return stacked.groupBy("col_name").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col("val").isNull(), 1).otherwise(0)).alias("n_null"),
-        distinct.alias("n_distinct"),
-    )
-
-
 def profile_numeric(
     df: DataFrame, carriers: dict[str, Column]
 ) -> DataFrame:

@@ -213,7 +213,7 @@ def hll_distinct_sketch(
     """Mergeable distinct-count sketches (Apache DataSketches HLL via
     Spark's built-in ``hll_sketch_agg``): one BINARY sketch per group
     (or one row with ``by=None``) that persists to parquet and merges
-    across corpora/epochs with ``hll_merge`` — the capability
+    across corpora/epochs with Spark's ``hll_union_agg`` — the capability
     ``approx_count_distinct`` lacks (its estimate is terminal; these
     sketches are state). Standard error ≈ 1.04/√2^lg_k (~1.6% at the
     default lg_k=12, 2 KB per sketch).
@@ -225,24 +225,6 @@ def hll_distinct_sketch(
     if by is None:
         return df.agg(agg)
     return df.groupBy(by).agg(agg)
-
-
-def hll_merge(sketches: DataFrame, by: str | None = None) -> DataFrame:
-    """Union sketch rows (optionally per group). HLL registers merge
-    by pointwise max, so a union of per-epoch sketches carries the
-    SAME error guarantee as one sketch over the concatenated stream;
-    the estimates can differ by a few counts because DataSketches
-    promotes sparse-mode sketches differently under union than under
-    direct build (tested: within the shared error envelope). Sketches
-    built at different lg_k merge at the SMALLEST precision involved
-    (``allowDifferentLgConfigK`` is deliberate — cross-epoch unions
-    must not fail on a config drift — but error bounds then follow the
-    coarsest sketch). Input column must be ``sketch``; output keeps
-    the name."""
-    agg = F.hll_union_agg(F.col("sketch"), F.lit(True)).alias("sketch")
-    if by is None:
-        return sketches.agg(agg)
-    return sketches.groupBy(by).agg(agg)
 
 
 def hll_estimate(sketches: DataFrame) -> DataFrame:
@@ -299,7 +281,7 @@ def bloom_filter(
     in — map-side ``bit_or`` collapses each task's bits first, the
     same sketch-sized-shuffle posture as ``count_min_sketch``.
 
-    Mergeable (``bloom_merge``): OR-ing word tables of two corpora
+    Mergeable: a per-word ``bit_or`` over two corpora's word tables
     IS the filter of their union — bit-exact, because the hash is
     deterministic. Unlike ``DataFrame.stat.bloomFilter`` (a
     driver-materialized JVM object), the word table is itself a
@@ -316,25 +298,6 @@ def bloom_filter(
     )
 
 
-def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """Union of the underlying key sets: cell-wise OR of word tables.
-    Bit-exact equal to building one filter over the concatenated
-    input (pinned in tests) — the cross-epoch merge path."""
-    if not blooms:
-        raise ValueError("need at least one bloom word table")
-    out = blooms[0]
-    for b in blooms[1:]:
-        out = out.unionByName(b)
-    return out.groupBy("w").agg(F.bit_or("bits").alias("bits"))
-
-
-def bloom_fpp(n_keys: int, m_bits: int, k_hashes: int) -> float:
-    """Expected false-positive probability (1 − e^{−kn/m})^k."""
-    import math
-
-    return (1.0 - math.exp(-k_hashes * n_keys / m_bits)) ** k_hashes
-
-
 def bloom_maybe_contains(
     keys: DataFrame,
     bloom: DataFrame,
@@ -345,7 +308,7 @@ def bloom_maybe_contains(
 ) -> DataFrame:
     """(col, maybe_present) for every distinct non-null key in
     ``keys``: TRUE iff all k bits are set (never a false negative;
-    false positives at the ``bloom_fpp`` rate). The sketch side is at
+    false positives at the (1 − e^{−kn/m})^k rate). The sketch side is at
     most m/64 narrow rows — broadcast by default (a 2^20-bit filter is
     16 KB of words) so the probe side NEVER shuffles; pass
     ``broadcast_sketch=False`` above ~2^31 bits to let AQE pick a

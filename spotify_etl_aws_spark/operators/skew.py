@@ -28,7 +28,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from .lineage import cut_lineage_eager
 
 _SALT = "__salt"
 
@@ -69,81 +68,6 @@ def detect_hot_keys(
     if len(on_cols) == 1:
         return [r[0] for r in rows]
     return [tuple(r) for r in rows]
-
-
-def detect_hot_keys_sketched(
-    df: DataFrame,
-    on: str,
-    min_fraction: float = 0.01,
-    capacity: int | None = None,
-) -> list:
-    """``detect_hot_keys`` for web-scale key cardinality: the exact
-    variant's groupBy shuffles the FULL key space (every registrable
-    domain, every user id); this one runs Misra–Gries with a capped
-    per-task counter dict (operators/sketches.py) and shuffles only
-    the ≤ capacity survivors per task.
-
-    No false negatives: a key ABSENT from the merged survivors has
-    true count ≤ Σ partition decrements (every decrement removed at
-    most one of its occurrences), and a PRESENT key undercounts by at
-    most that same Σ — so filtering survivors at
-    ``cnt + max_undercount > total · min_fraction`` keeps every truly
-    hot key PROVIDED ``max_undercount ≤ total · min_fraction``. The
-    default capacity ⌈4/min_fraction⌉ guarantees that a priori
-    (undercount ≤ n/(capacity+1) < n·fraction/4); a caller-supplied
-    capacity too small for the stream makes the certificate itself
-    report the violation, and this function then RAISES instead of
-    silently returning a list that may have lost a hot key. Keys just
-    below threshold may slip in (harmless — salting a lukewarm key
-    costs a few replicated rows).
-
-    One corpus scan builds the partials (localCheckpoint-ed); the
-    total row count is derived from them exactly
-    (n = Σ cnt + dec·(capacity+1): each decrement consumed the
-    arriving key's occurrence plus one from each of the ``capacity``
-    counters), so no separate count() pass runs. Key values are
-    recovered at their ORIGINAL type with one map-side filtered
-    distinct (the sketch compares string forms)."""
-    import math
-
-    cap = capacity or max(64, int(math.ceil(4.0 / min_fraction)))
-    from .sketches import mg_partials
-
-    parts = mg_partials(df.select(on), on, capacity=cap).transform(cut_lineage_eager)
-    head = parts.agg(
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("c"),
-        F.coalesce(F.sum("dec"), F.lit(0)).alias("d"),
-    ).collect()[0]
-    max_under = int(head["d"])
-    total = int(head["c"]) + max_under * (cap + 1)
-    if not total:
-        return []
-    threshold_count = total * min_fraction
-    if max_under > threshold_count:
-        raise ValueError(
-            f"MG capacity {cap} too small for this stream: the undercount "
-            f"certificate ({max_under}) exceeds the hot-key threshold "
-            f"({threshold_count:.0f} rows), so an evicted key could be "
-            "hot — raise capacity (default ceil(4/min_fraction) is "
-            "always sufficient)"
-        )
-    survivors = [
-        r[on]
-        for r in parts.filter(F.col(on).isNotNull())
-        .groupBy(on)
-        .agg(F.sum("cnt").alias("cnt"))
-        .filter(F.col("cnt") + F.lit(max_under) > F.lit(threshold_count))
-        .collect()
-    ]
-    if not survivors:
-        return []
-    return [
-        r[0]
-        for r in df.select(on)
-        .filter(F.col(on).cast("string").isin(survivors))
-        .distinct()
-        .collect()
-    ]
 
 
 def _hot_predicate(on_cols: list[str], hot_keys: list) -> F.Column:

@@ -55,55 +55,6 @@ def assign_split(
     return df.select("*", split_column(weights, id_col, salt))
 
 
-def split_leakage_pairs(
-    df: DataFrame,
-    split_col: str = "split",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Train/eval LEAKAGE audit: near-duplicate pairs that STRADDLE a
-    split boundary — the leak hash-splitting cannot prevent (splits
-    partition doc ids; two near-identical documents with different ids
-    can land on opposite sides, silently inflating eval scores).
-
-    Returns (doc_a, doc_b, jaccard, split_a, split_b) with
-    split_a != split_b, built on the scale-path near-dup machinery
-    (``dedup.lsh_verified_pairs``: banded-LSH candidates, exact
-    verification of candidates only) plus two broadcast-sized id→split
-    joins — the pair set is tiny by construction, so the split lookup
-    joins at pair-set size, never corpus size. Empty result = clean
-    splits; production pipelines either drop the eval-side doc or move
-    the pair to one side."""
-    from .dedup import lsh_verified_pairs
-
-    pairs = lsh_verified_pairs(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        threshold=threshold,
-    )
-    splits = df.select(F.col(id_col), F.col(split_col))
-    sa = splits.withColumnRenamed(id_col, "doc_a").withColumnRenamed(
-        split_col, "split_a"
-    )
-    sb = splits.withColumnRenamed(id_col, "doc_b").withColumnRenamed(
-        split_col, "split_b"
-    )
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(F.col("split_a") != F.col("split_b"))
-        .select("doc_a", "doc_b", "jaccard", "split_a", "split_b")
-    )
-
-
 def sample_exact_k_per_stratum(
     df: DataFrame,
     strata_col: str,
@@ -114,9 +65,9 @@ def sample_exact_k_per_stratum(
     """Deterministic EXACT-k sample per stratum: rank rows inside each
     stratum by a salted md5 of the id (ties impossible — the id rides
     as the final key) and keep rank <= k. The per-stratum twin of the
-    rate-based ``stratified_sample``: rates give you an expected
-    fraction, this gives you exactly min(k, stratum size) rows — the
-    shape eval-set carving and per-source capping want.
+    rate-based ``heuristics.stratified_sample_rates``: rates give you an
+    expected fraction, this gives you exactly min(k, stratum size) rows
+    — the shape eval-set carving and per-source capping want.
 
     md5 rather than xxhash64 so the selection is portable to any
     engine (same reason the MinHash lanes hash with md5): the sampled

@@ -1,27 +1,24 @@
-"""Video (binary) column operators (north-star, SURVEY.md §2.11d) —
+"""Video (binary) container codec (north-star, SURVEY.md §2.11d) —
 the video third of the multimodal lane.
 
 Same design as the image codecs (``operators/multimodal.py``,
 ``operators/jpeg.py``) and the audio lane (``operators/audio.py``): a
 REAL stdlib container codec — RIFF/AVI carrying Motion-JPEG, every
 frame a genuine baseline JFIF file produced by our own pure-numpy T.81
-encoder — plus mapInPandas kernels for encode / metadata / frame
-sampling, under the same scale rules: bytes flow scan -> kernel ->
-sink and never through a shuffle; aggregate on the extracted METADATA
-frames, not the media.
+encoder. The clip near-dup lane (``operators/video_fp.py``) decodes
+these containers frame by frame.
 
-The scale-critical design point is the ``idx1`` frame index: metadata
-extraction (``with_video_meta``) parses headers only, and frame
-sampling (``sample_frames``) slices ONLY the sampled frames out of the
-container via the index before handing them to the JPEG decoder —
-a 1-in-100 sampling rate decodes 1% of the entropy data, exactly how a
-production frame sampler seeks I-frames instead of decoding the whole
-stream. Inter-frame-compressed codecs (H.264/VP9/AV1) need libraries
-this container lacks — ``parse_avi`` raises ``NotImplementedError`` at
-the same seam where a real deployment would call ffmpeg/PyAV.
+The scale-critical design point is the ``idx1`` frame index:
+``extract_frame`` slices one frame out of the container via the index
+before it reaches the JPEG decoder, with no decode of any other frame —
+how a production frame sampler seeks I-frames instead of decoding the
+whole stream. Inter-frame-compressed codecs (H.264/VP9/AV1) need
+libraries this container lacks — ``parse_avi`` raises
+``NotImplementedError`` at the same seam where a real deployment would
+call ffmpeg/PyAV.
 
 The reference's domain carries media URLs but never the media itself
-(`/root/reference/ingestion/ingestion/models/model.py:10,19` — image
+(the reference's `ingestion/ingestion/models/model.py:10,19` — image
 URLs; `playlist_model.py:12-13`); this lane is what carrying video
 payloads through the same pipeline looks like.
 """
@@ -29,15 +26,7 @@ payloads through the same pipeline looks like.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 from typing import NamedTuple
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from spotify_etl_aws_spark.operators.jpeg import decode_jpeg, encode_jpeg
 
 _AVIF_HASINDEX = 0x00000010
 _AVIIF_KEYFRAME = 0x00000010
@@ -52,15 +41,6 @@ class VideoMeta(NamedTuple):
     frame_index: list[tuple[int, int]]
 
 
-def _chunk(tag: bytes, body: bytes) -> bytes:
-    """A RIFF chunk: fourcc + LE size + body, padded to word alignment."""
-    return tag + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-
-def _list(tag: bytes, body: bytes) -> bytes:
-    return _chunk(b"LIST", tag + body)
-
-
 def encode_avi_mjpeg(
     frames: list[bytes], fps: int, width: int, height: int
 ) -> bytes:
@@ -69,6 +49,14 @@ def encode_avi_mjpeg(
     a '00dc' chunk (Motion-JPEG is intra-only — no inter-frame state),
     followed by a standard 'idx1' index so readers can seek without
     scanning 'movi'."""
+
+    def _chunk(tag: bytes, body: bytes) -> bytes:
+        # fourcc + LE size + body, padded to word alignment
+        return tag + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
+
+    def _list(tag: bytes, body: bytes) -> bytes:
+        return _chunk(b"LIST", tag + body)
+
     if not frames:
         raise ValueError("AVI needs at least one frame")
     if fps <= 0 or width <= 0 or height <= 0:
@@ -213,240 +201,3 @@ def extract_frame(data: bytes, meta: VideoMeta, i: int) -> bytes:
     decode of any other frame."""
     off, size = meta.frame_index[i]
     return data[off : off + size]
-
-
-def avi_n_bytes(frame_sizes: list[int]) -> int:
-    """Exact byte size of ``encode_avi_mjpeg`` output for the given
-    per-frame JPEG sizes (the analytic-oracle pattern): fixed 240-byte
-    header tree + per-frame chunk (8 + padded size) in movi + 16-byte
-    idx1 entry."""
-    movi = 4 + sum(8 + s + (s & 1) for s in frame_sizes)
-    # RIFF(12) + LIST hdrl(12 + avih chunk 64 + LIST strl(12 + strh 64
-    # + strf 48)) + LIST movi(8 + movi) + idx1(8 + 16n)
-    return 12 + 12 + 64 + 12 + 64 + 48 + 8 + movi + 8 + 16 * len(frame_sizes)
-
-
-# ------------------------------------------------------------ kernels
-
-
-def encode_video(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames_col: str = "n_frames",
-    fps_col: str = "fps",
-    width_col: str = "width",
-    height_col: str = "height",
-    payload_col: str = "payload",
-    quality: int = 85,
-) -> DataFrame:
-    """(id, n_frames, fps, width, height, payload) -> (id, video
-    binary): the Arrow-batched encode kernel. Each frame is a real
-    baseline JPEG; the payload is rolled by one byte per frame so
-    frames differ deterministically (same fill convention as the image
-    encoders)."""
-    schema = f"{id_col} bigint, video binary"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, n, r, w, h, p in zip(
-                pdf[id_col], pdf[n_frames_col], pdf[fps_col],
-                pdf[width_col], pdf[height_col], pdf[payload_col],
-            ):
-                p = bytes(p)
-                frames = [
-                    encode_jpeg(int(w), int(h), p[k % len(p):] + p[: k % len(p)], quality=quality)
-                    for k in range(int(n))
-                ]
-                out.append((int(i), encode_avi_mjpeg(frames, int(r), int(w), int(h))))
-            yield pd.DataFrame(out, columns=[id_col, "video"])
-
-    return df.select(
-        id_col, n_frames_col, fps_col, width_col, height_col, payload_col
-    ).mapInPandas(gen, schema=schema)
-
-
-def with_video_meta(
-    df: DataFrame, id_col: str = "doc_id", video_col: str = "video"
-) -> DataFrame:
-    """Container metadata in one Arrow pass — header + idx1 parse ONLY,
-    zero frame decodes: (id, width, height, fps, n_frames, duration_s,
-    n_bytes). The binary column is dropped on the way out so downstream
-    shuffles never carry video bytes."""
-    schema = (
-        f"{id_col} bigint, width int, height int, fps double, "
-        "n_frames int, duration_s double, n_bytes bigint"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spotify_etl_aws_spark.operators.gif import gif_scan_meta
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[video_col]):
-                b = bytes(b)
-                if b[:4] == b"GIF8":
-                    # animated-GIF dispatch: header + block walk only,
-                    # no LZW decode (the same header-only posture)
-                    w, h, nf, delay_cs = gif_scan_meta(b)
-                    dur = delay_cs / 100.0
-                    rows.append(
-                        (int(i), w, h, nf / dur if dur else 0.0, nf, dur, len(b))
-                    )
-                    continue
-                m = parse_avi(b)
-                rows.append(
-                    (
-                        int(i), m.width, m.height, m.fps, m.n_frames,
-                        m.n_frames / m.fps if m.fps else 0.0, len(b),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "width", "height", "fps",
-                    "n_frames", "duration_s", "n_bytes",
-                ],
-            )
-
-    return df.select(id_col, video_col).mapInPandas(gen, schema=schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    every: int = 10,
-    id_col: str = "doc_id",
-    video_col: str = "video",
-) -> DataFrame:
-    """Uniform frame sampling: one video row in -> one row per sampled
-    frame out (frames 0, every, 2*every, ...), each decoded to luma
-    statistics. ONLY the sampled frames' bytes reach the JPEG decoder —
-    the idx1 index slices them out, so cost scales with the sampling
-    rate, not the video length (the I-frame-seek posture a production
-    sampler has)."""
-    if every <= 0:
-        raise ValueError(f"every must be positive, got {every}")
-    schema = (
-        f"{id_col} bigint, frame_idx int, width int, height int, "
-        "frame_bytes int, mean_luma double, max_luma double"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from spotify_etl_aws_spark.operators.gif import gif_frames
-
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[video_col]):
-                b = bytes(b)
-                if b[:4] == b"GIF8":
-                    # animated-GIF dispatch: frame k is composited RGB
-                    # already; frame_bytes reports the canvas size
-                    all_frames = gif_frames(b)
-                    samples = [
-                        (k, None, f)
-                        for k, (_d, f) in enumerate(all_frames)
-                        if k % every == 0
-                    ]
-                else:
-                    m = parse_avi(b)
-                    samples = [
-                        (k, extract_frame(b, m, k), None)
-                        for k in range(0, len(m.frame_index), every)
-                    ]
-                for k, jpg, raw in samples:
-                    if jpg is not None:
-                        w, h, rgb = decode_jpeg(jpg)
-                        nb = len(jpg)
-                    else:
-                        rgb = raw
-                        nb = len(raw)
-                        # canvas geometry from the GIF header
-                        w, h = struct.unpack_from("<HH", b, 6)
-                        if len(raw) != 3 * w * h:
-                            raise ValueError(
-                                f"GIF frame buffer {len(raw)} bytes does "
-                                f"not match canvas {w}x{h}"
-                            )
-                    px = np.frombuffer(rgb, dtype=np.uint8).reshape(-1, 3)
-                    luma = (
-                        0.299 * px[:, 0] + 0.587 * px[:, 1] + 0.114 * px[:, 2]
-                    )
-                    rows.append(
-                        (
-                            int(i), k, w, h, nb,
-                            float(luma.mean()), float(luma.max()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_idx", "width", "height",
-                    "frame_bytes", "mean_luma", "max_luma",
-                ],
-            )
-
-    return df.select(id_col, video_col).mapInPandas(gen, schema=schema)
-
-
-def video_quality_gate(
-    meta: DataFrame,
-    min_duration_s: float = 0.5,
-    min_fps: float = 1.0,
-    min_pixels: int = 64,
-) -> DataFrame:
-    """Filter decoded-video metadata to clips long enough, fast enough,
-    and big enough to train on — pure JVM expressions over the metadata
-    frame (the video analogue of the audio/text quality gates)."""
-    return meta.filter(
-        (F.col("duration_s") >= min_duration_s)
-        & (F.col("fps") >= min_fps)
-        & (F.col("width") * F.col("height") >= min_pixels)
-    )
-
-
-def video_embeddings(
-    df: DataFrame,
-    every: int = 10,
-    grid: int = 4,
-    id_col: str = "doc_id",
-    video_col: str = "video",
-) -> DataFrame:
-    """(id, video binary) -> (id, embedding array<float>): mean-pooled
-    block-mean fingerprints of the SAMPLED frames (frames 0, every,
-    2*every, ... — index-seek, so only sampled frames decode),
-    renormalized to unit length. Two videos sharing most frames land
-    near each other — the clip-level near-dup signal — and the output
-    feeds the same vector lanes as the image/audio/text embeddings."""
-    import numpy as np
-
-    from spotify_etl_aws_spark.operators.multimodal import blockmean_vector
-
-    if every <= 0:
-        raise ValueError(f"every must be positive, got {every}")
-    schema = f"{id_col} bigint, embedding array<float>"
-
-    def one(b: bytes) -> list[float]:
-        data = bytes(b)
-        meta = parse_avi(data)
-        acc = None
-        n = 0
-        for idx in range(0, meta.n_frames, every):
-            v = blockmean_vector(extract_frame(data, meta, idx), grid)
-            acc = v if acc is None else acc + v
-            n += 1
-        if not n:
-            return [0.0] * (3 * grid * grid)
-        pooled = acc / n
-        norm = float(np.linalg.norm(pooled))
-        return [float(x) for x in (pooled / norm if norm > 0 else pooled)]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": [one(b) for b in pdf[video_col]],
-                }
-            )
-
-    return df.select(id_col, video_col).mapInPandas(gen, schema)

@@ -1,22 +1,12 @@
-"""Vocabulary statistics (north-star, SURVEY.md §2.11c): the counting
-kernels a tokenizer-training loop runs over a corpus.
-
-``bpe_pair_counts`` is the inner loop of one BPE merge iteration:
-count every ADJACENT pre-token pair across the corpus and rank merge
-candidates by frequency. All JVM built-ins — the pair construction is
-``zip_with`` over two shifted slices of the token array (no UDF, no
-per-row Python), the count is one partial-aggregating shuffle on the
-pair key, and top-k is TakeOrderedAndProject. Word-level BPE trainers
-count within-word character pairs instead; the array plumbing is
-identical, only the tokenizer changes.
-
-``token_frequencies`` is the unigram side (vocab coverage / frequency
-cutoff decisions) — same shape without the shift.
+"""Pre-tokenization (north-star, SURVEY.md §2.11c) shared by the
+subword tokenizers (``operators/bpe.py``, ``operators/unigram.py``):
+lowercase, then split into letter / digit / punctuation runs — all JVM
+built-ins (``regexp_extract_all``), no UDF, no per-row Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # letter runs / digit runs / punctuation runs — the regex-split shape
@@ -27,57 +17,4 @@ BPE_PRETOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]+"
 def _pretokens(text_col: str) -> Column:
     return F.regexp_extract_all(
         F.lower(F.col(text_col)), F.lit(BPE_PRETOKEN_RE), 0
-    )
-
-
-def bpe_pair_counts(
-    docs: DataFrame, text_col: str = "text", top_k: int | None = None
-) -> DataFrame:
-    """(left, right, n_pairs) for every adjacent pre-token pair in the
-    corpus, most frequent first — the merge-candidate ranking of one
-    BPE iteration. ``top_k`` limits via TakeOrderedAndProject (ties
-    broken by (left, right) so the cut is deterministic)."""
-    toks = _pretokens(text_col)
-    # slice length must be non-negative: empty / single-token texts
-    # produce zero pairs, not an error
-    m = F.greatest(F.size(toks) - 1, F.lit(0))
-    pairs = F.zip_with(
-        F.slice(toks, 1, m),
-        F.slice(toks, 2, m),
-        lambda a, b: F.struct(a.alias("left"), b.alias("right")),
-    )
-    counted = (
-        docs.select(F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
-        .agg(F.count("*").alias("n_pairs"))
-    )
-    if top_k is not None:
-        counted = counted.orderBy(
-            F.desc("n_pairs"), F.asc("left"), F.asc("right")
-        ).limit(top_k)
-    return counted
-
-
-def token_frequencies(
-    docs: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
-    """(token, n_occurrences, n_docs) per pre-token — the unigram table
-    behind vocab-size / frequency-cutoff decisions. One explode + one
-    partially-aggregated shuffle."""
-    # Materialize the doc id BEFORE the explode: a nondeterministic
-    # expression placed in the same select as explode() is evaluated in
-    # the Project above the Generate, handing every exploded (doc,
-    # token) row a fresh id and collapsing n_docs into n_occurrences.
-    # As a pre-materialized attribute it is evaluated once per input row.
-    tok = docs.withColumn("__doc", F.monotonically_increasing_id()).select(
-        "__doc",
-        F.explode(_pretokens(text_col)).alias("token"),
-    )
-    return (
-        tok.groupBy("token")
-        .agg(
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("__doc").alias("n_docs"),
-        )
-        .filter(F.col("n_occurrences") >= min_count)
     )

@@ -1623,12 +1623,9 @@ def stats_profile_hll_contract(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Cardinality profile at the warehouse posture: HLL++ estimate
-    per column (operators/profile.py:profile_completeness with
-    approx_rsd={PROFILE_HLL_RSD}) must land within {PROFILE_HLL_BOUND}
-    relative of the exact distinct count. Returns (col_name,
-    exact_distinct, within_bound)."""
-    from ..operators.profile import profile_completeness
-
+    per column (approx_count_distinct with rsd={PROFILE_HLL_RSD}) must
+    land within {PROFILE_HLL_BOUND} relative of the exact distinct
+    count. Returns (col_name, exact_distinct, within_bound)."""
     from ..operators.profile import stack_carriers
 
     orders = t(spark, sf_dir, "orders")

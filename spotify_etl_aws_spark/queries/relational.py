@@ -65,17 +65,11 @@ def flagship_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decimal_revenue() -> F.Column:
-    """Exact per-item revenue: decimal(12,2) price x decimal(3,2)
-    (1 - discount) — shared by the flagship and Q5 money sums."""
-    return F.col("l_extendedprice").cast("decimal(12,2)") * (
-        F.lit(1).cast("decimal(3,2)") - F.col("l_discount").cast("decimal(3,2)")
-    )
-
-
 def _revenue_sum() -> F.Column:
     """Exact money sum, integer-lane: identical value to
-    ``round(sum(_decimal_revenue()), 2)`` cast to double, ~2x faster
+    ``round(sum(CAST(l_extendedprice AS decimal(12,2)) * (CAST(1 AS
+    decimal(3,2)) - CAST(l_discount AS decimal(3,2)))), 2)`` cast to
+    double (the exact decimal per-item revenue), ~2x faster
     per row (measured at 100x: decimal-product sum 2.43 s vs 1.49 s
     for this lane on a 60M-row scan — the decimal multiply/add per ROW
     was most of the q1/q5/flagship scan floor).

@@ -63,8 +63,7 @@ lane after the driver's frozen 50-query window):
   counting; the oracle re-derives both the brute triangle count and
   the orientation's wedge count);
 - composite-state streaming: ``streaming_type_profiles`` (declared
-  GroupState lane; the transformWithStateInPandas twin sits behind
-  the documented protobuf seam in streaming/stateful.py).
+  GroupState lane, streaming/stateful.py).
 
 Reference cites: the reference's analytics stop at f-string SQL over
 DuckDB (`ingestion/ingestion/bronze/bronze.py:139-166`) and dbt models

@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine, l2_norm
+from ..functions.vectors import as_double, cosine
 from ..sources.readers import load_table as t
 
 QUERY_VEC_ID = 0
@@ -150,41 +150,6 @@ def _probe_cells(
 
 # ORACLE_COSINE_TOPK is defined below _IVF_ASSIGN_CTES (the ivf_probe
 # lane shares the quantizer CTE chain).
-
-
-def _assign_cells(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
-    """E-step: argmax-cosine cell assignment as a pure projection. The
-    centroid set is inlined as an array-of-structs LITERAL, so the
-    assignment is map-side only — no broadcast-build job, no crossJoin,
-    zero shuffles; argmax via transform + array_max (ties -> lowest
-    cell id). Zero-norm vectors are dropped — the same index contract
-    as the Arrow kernel (operators/vector_ops.py), so the two
-    formulations stay pair-for-pair comparable. The SQL oracle twins do
-    NOT replicate the drop (they'd order NULL cosines arbitrarily);
-    that contract is safe because the fixture contains no zero vectors,
-    asserted by tests/test_edge_cases.py::test_fixture_has_no_zero_vectors."""
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(cell).alias("cell"),
-                F.array(*[F.lit(x) for x in cv]).alias("cv"),
-            )
-            for cell, cv in cents
-        ]
-    )
-    best = F.array_max(
-        F.transform(
-            arr,
-            lambda c: F.struct(
-                cosine(F.col("v"), c["cv"]).alias("cs"),
-                (-c["cell"]).alias("nc"),
-            ),
-        )
-    )
-    return (
-        emb.filter(l2_norm(F.col("v")) > 0)
-        .select("vec_id", "v", (-best["nc"]).alias("cell"))
-    )
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -334,40 +299,6 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def _ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned-quantizer cell assignment (vec_id, v, cell) shared by the
-    ANN join and the embedding near-dup query."""
-    return _assign_cells(
-        _embeddings(spark, sf_dir), _learned_centroids(spark, sf_dir)
-    )
-
-
-def _cell_pairs(assign: DataFrame, threshold: float) -> DataFrame:
-    """Within-cell candidate pairs above a cosine threshold as a JVM
-    expression join. This is the independent REFERENCE formulation of
-    the Arrow GEMM kernel (operators/vector_ops.py) — kept for the
-    cross-validation tests, which assert both paths produce the same
-    pair set; the declared queries use the kernel (8-14x faster, see
-    the kernel module docstring)."""
-    a = assign.alias("a")
-    b = assign.alias("b")
-    cos = cosine(F.col("a.v"), F.col("b.v"))
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= threshold)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.cell").alias("cell"),
-            F.round(cos, 4).alias("cosine"),
-        )
-    )
-
-
 def vector_ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.vector_ops import assign_cells_arrow, cell_cosine_pairs_arrow
 
@@ -424,7 +355,8 @@ _COS_EC = """list_dot_product(e.v, c.cv)
                     / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(c.cv, c.cv)))"""
 
 def _ivf_assign_ctes(iters: int = KMEANS_ITERS) -> str:
-    """SQL twin of ``_fit_centroids`` + ``_ivf_assignments``, GENERATED
+    """SQL twin of ``_fit_centroids`` + the learned-quantizer cell
+    assignment (``assign_cells_arrow``), GENERATED
     for any Lloyd iteration count so the oracle can never freeze the
     quantizer quality at one hand-unrolled iteration: ``c0`` seeds from
     the first NUM_CENTROIDS vectors, then each iteration i contributes

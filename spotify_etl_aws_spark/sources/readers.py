@@ -26,7 +26,6 @@ from ..schemas import (
     EVENTS_PARQUET_NANOS,
     RAW_PLAYLIST,
     TESTDATA_SCHEMAS,
-    TESTDATA_TABLES,
 )
 
 
@@ -123,18 +122,6 @@ def widen_if_starved(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TESTDATA_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def _sample_json_file(path: str) -> str | None:

@@ -6,7 +6,7 @@ collapses both hops into a single distributed write — the same call
 works for ``/local`` and ``s3a://`` destinations.
 
 The reference's MotherDuck CTAS (bronze.py:294-318) maps to
-``saveAsTable`` against the session catalog; its dbt post-hook gold
+``saveAsTable`` against the session catalog (``save_bucketed``); its dbt post-hook gold
 export — which re-runs after **every** core model, 4x
 (dbt_project.yml:41) — becomes a single explicit ``write_parquet`` at
 the end of the gold build.
@@ -66,17 +66,6 @@ def write_partitioned(
     partition-pruned scans instead of full-table filters.
     """
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Raw-zone JSON landing (reference raw.py:200-241)."""
-    df.write.mode(mode).json(path)
-
-
-def save_as_table(df: DataFrame, name: str, mode: str = "overwrite") -> None:
-    """Catalog sink — the Spark equivalent of the reference's remote-catalog
-    CTAS into MotherDuck (bronze.py:294-318, manager.py:151-171)."""
-    df.write.mode(mode).saveAsTable(name)
 
 
 def partition_last(schema: StructType, col: str) -> StructType:

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..operators.scd import latest_by_key
 from ..operators.lineage import cut_lineage_eager
+from .pipeline import clamped_shuffle_partitions
 
 
 def run_cdc_upsert(
@@ -71,20 +72,15 @@ def run_cdc_upsert(
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
 
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key, "200")
     try:
-        # same clamp as run_available_now: an untuned 200-partition
-        # default means 200 tiny tasks per micro-batch at test scale
-        if old_parts.isdigit() and int(old_parts) > 32:
-            spark.conf.set(key, "32")
-        q = (
-            changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with clamped_shuffle_partitions(spark):
+            q = (
+                changes.writeStream.foreachBatch(merge)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         if not current:
             out = changes.sparkSession.createDataFrame(
                 [], changes.schema
@@ -100,6 +96,5 @@ def run_cdc_upsert(
         )
         return final
     finally:
-        spark.conf.set(key, old_parts)
         shutil.rmtree(checkpoint, ignore_errors=True)
         shutil.rmtree(root, ignore_errors=True)

@@ -16,7 +16,10 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+import threading
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,36 +31,6 @@ from ..sources.readers import (
     events_ts_unit,
     table_path,
 )
-
-
-ROCKSDB_STATE_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def use_rocksdb_state(spark: SparkSession, changelog: bool = True) -> None:
-    """Switch streaming state to the RocksDB provider (session-level;
-    applies to queries STARTED afterwards — existing checkpoints keep
-    the provider they were created with).
-
-    This is the 100 TB posture for unbounded state: the default
-    HDFS-backed provider keeps every key on the executor HEAP, so a
-    cross-corpus dedup state (one key per distinct document —
-    billions) dies in GC long before the capacity limit. RocksDB keeps
-    state off-heap/on-disk with block-cache reads, and changelog
-    checkpointing ships per-batch deltas instead of full snapshots.
-    Verified working against the bundled rocksdbjni in this Spark
-    distribution (see test_rocksdb_state_store_dedup)."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_STATE_PROVIDER
-    )
-    if changelog:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing."
-            "enabled",
-            "true",
-        )
 
 
 def _stream_reader(spark: SparkSession, sf_dir: str, name: str, schema) -> DataFrame:
@@ -91,35 +64,64 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _stream_reader(spark, sf_dir, name, TESTDATA_SCHEMAS[name])
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_STREAM_SHUFFLE_CAP = 32
+_clamp_lock = threading.Lock()
+# session -> [streams inside the clamp, the value to restore]
+_clamps: dict[SparkSession, list] = {}
+
+
+@contextmanager
+def clamped_shuffle_partitions(spark: SparkSession) -> Iterator[None]:
+    """Cap ``spark.sql.shuffle.partitions`` at 32 while streams run.
+
+    A stream's state-store partition count is fixed by shuffle.partitions
+    at its FIRST run; an untuned session default (200) means 200 tiny
+    state tasks per micro-batch at test scale. The setting is
+    session-wide and streams run concurrently (``run_concurrently``), so
+    the clamp is counted under a lock: the first stream in saves the
+    value and clamps it, the last one out restores it. Per-stream
+    save/restore would let a stream that started inside another's clamp
+    restore the clamped value and leave it behind."""
+    with _clamp_lock:
+        held = _clamps.get(spark)
+        if held is None:
+            old = spark.conf.get(_SHUFFLE_PARTITIONS, "200")
+            held = _clamps[spark] = [0, old]
+            if old.isdigit() and int(old) > _STREAM_SHUFFLE_CAP:
+                spark.conf.set(_SHUFFLE_PARTITIONS, str(_STREAM_SHUFFLE_CAP))
+        held[0] += 1
+    try:
+        yield
+    finally:
+        with _clamp_lock:
+            held[0] -= 1
+            if not held[0]:
+                del _clamps[spark]
+                spark.conf.set(_SHUFFLE_PARTITIONS, held[1])
+
+
 def run_available_now(
     df: DataFrame, base_name: str, output_mode: str = "append"
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (AvailableNow) into a memory
-    sink; return the materialized result as a batch DataFrame.
-
-    The state-store partition count is fixed by shuffle.partitions at the
-    stream's FIRST run; an untuned session default (200) means 200 tiny
-    state tasks per microbatch at test scale, so it is clamped for the
-    duration of the run (runtime-settable, restored after)."""
+    sink, under ``clamped_shuffle_partitions``; return the materialized
+    result as a batch DataFrame."""
     name = f"{base_name}_{uuid.uuid4().hex[:8]}"
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{base_name}_")
     sess = df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    old = sess.conf.get(key, "200")
     try:
-        if old.isdigit() and int(old) > 32:
-            sess.conf.set(key, "32")
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with clamped_shuffle_partitions(sess):
+            q = (
+                df.writeStream.outputMode(output_mode)
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        sess.conf.set(key, old)
         # the memory sink holds the results; the checkpoint is dead state
         # once the query terminated — don't leak a dir per run
         shutil.rmtree(checkpoint, ignore_errors=True)
@@ -175,9 +177,8 @@ def incremental_bronze(
                 landed_schema = None  # first batch: nothing landed yet
             if landed_schema is not None:
                 # refuse to append a structurally drifted batch — the
-                # ingestion-QA boundary (operators/drift.py, same
-                # normalization as drift_gate but reusing the one
-                # footer read); shred()'s output schema is stable, so
+                # ingestion-QA boundary (operators/drift.py, nullability
+                # normalized on both sides); shred()'s output schema is stable, so
                 # this only fires if the shredder or the raw contract
                 # changes under us
                 assert_no_breaking_drift(

@@ -65,86 +65,16 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def user_type_profiles(events: DataFrame) -> DataFrame:
-    """Per-user event-type profile via Spark 4's
-    ``transformWithStateInPandas`` (the typed-state successor to
-    ``applyInPandasWithState``): a ``ValueState`` row counter plus a
-    ``MapState`` keyed by event_type — the composite-state surface the
-    tuple-state API can't express without packing everything into one
-    blob. Emits, per user per trigger, the post-batch
-    (n_events, n_types, top_type); top_type breaks count ties on the
-    lexicographically smallest type so the output is deterministic and
-    a complete AvailableNow pass equals the batch aggregate.
-
-    ENVIRONMENT SEAM: the transformWithState Python driver worker
-    requires ``google.protobuf`` (its state-server protocol), which
-    this container lacks — the query plan BUILDS but the stream
-    crashes at driver-worker init (STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE / ImportError google.protobuf). The
-    declared oracle lane therefore runs the semantically identical
-    ``user_type_profiles_gs`` below on ``applyInPandasWithState``;
-    this function is kept (and schema-tested) so a protobuf-equipped
-    deployment can switch APIs by swapping one call.
-
-    Scale: state is partitioned by user in the state store; per-user
-    cost is O(distinct types) (bounded — it's an enum), and only
-    touched keys' state round-trips per trigger.
-    """
-    from pyspark.sql.streaming import StatefulProcessor
-
-    out_schema = (
-        "user_id bigint, n_events bigint, n_types bigint, top_type string"
-    )
-
-    class _Profile(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._n = handle.getValueState("n", "n bigint")
-            self._types = handle.getMapState("types", "t string", "c bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-                for t, c in pdf["event_type"].value_counts().items():
-                    prev = (
-                        self._types.getValue((t,))[0]
-                        if self._types.containsKey((t,))
-                        else 0
-                    )
-                    self._types.updateValue((t,), (prev + int(c),))
-            self._n.update((n,))
-            counts = [(k[0], v[0]) for k, v in self._types.iterator()]
-            top = min(counts, key=lambda kv: (-kv[1], kv[0]))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "n_types": [len(counts)],
-                    "top_type": [top[0]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _Profile(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def user_type_profiles_gs(events: DataFrame) -> DataFrame:
-    """The ``user_type_profiles`` semantics on the GroupState API that
-    THIS environment can execute: the composite state (row count +
-    per-type counts) packs into one tuple — count as bigint, the type
-    histogram as a JSON string (the packing transformWithState's
-    MapState exists to avoid; both shapes are shown deliberately).
-    Same deterministic contract: per user per trigger, post-batch
-    (n_events, n_types, top_type), top_type tie-breaking on the
-    smallest type string; a complete AvailableNow pass equals the
-    batch aggregate.
+    """Per-user event-type profile on the GroupState API: the composite
+    state (row count + per-type counts) packs into one tuple — count as
+    bigint, the type histogram as a JSON string. Spark 4's
+    ``transformWithStateInPandas`` would hold the histogram in a
+    ``MapState`` instead, but its Python driver worker needs
+    ``google.protobuf``, which this environment lacks. Per user per
+    trigger it emits the post-batch (n_events, n_types, top_type),
+    top_type tie-breaking on the smallest type string, so a complete
+    AvailableNow pass equals the batch aggregate.
 
     Scale: identical state-store posture (one row per user), and the
     JSON blob is O(distinct types) = O(enum), so packing costs bytes,

@@ -1,6 +1,6 @@
 """BM25 retrieval (operators/bm25.py): exact parity with a
-pure-Python Okapi reference, index persistence with bucket partition
-pruning (plan-pinned), top-k plan shape, and fixture sanity."""
+pure-Python Okapi reference, bucket partition pruning on a landed
+index (plan-pinned), top-k plan shape, and fixture sanity."""
 
 from __future__ import annotations
 
@@ -11,12 +11,9 @@ from pyspark.sql import functions as F
 
 from spotify_etl_aws_spark.functions.text import TOKEN_SPLIT_RE
 from spotify_etl_aws_spark.operators.bm25 import (
-    Bm25Stats,
     bm25_index,
     bm25_score_py,
     bm25_search,
-    load_bm25_index,
-    save_bm25_index,
 )
 from spotify_etl_aws_spark.sources.readers import load_table
 
@@ -78,11 +75,10 @@ def test_saved_index_prunes_buckets_and_roundtrips(spark, tmp_path):
         sorted(CORPUS.items()), "doc_id bigint, text string"
     )
     postings, doc_lens, stats = bm25_index(docs, buckets=16)
-    path = str(tmp_path / "bm25")
-    save_bm25_index(postings, doc_lens, stats, path)
-    p2, d2, s2 = load_bm25_index(spark, path)
-    assert s2 == Bm25Stats(stats.n_docs, stats.avgdl)
-    out = bm25_search(p2, d2, s2, "quick brown fox", buckets=16)
+    path = str(tmp_path / "postings")
+    postings.write.partitionBy("bucket").parquet(path)
+    p2 = spark.read.parquet(path)
+    out = bm25_search(p2, doc_lens, stats, "quick brown fox", buckets=16)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the bucket IN-filter reached the scan as a partition filter
     assert "PartitionFilters" in plan
@@ -139,65 +135,23 @@ def test_edge_whitespace_doc_lengths_match_reference(spark):
         assert got[d] == pytest.approx(want[d], rel=1e-12)
 
 
-def test_search_many_matches_per_query_loop(spark):
-    """One distributed job for a query TABLE must reproduce the
-    per-query search exactly (scores and ranking), including queries
-    with no matching terms (absent from the output)."""
-    from spotify_etl_aws_spark.operators.bm25 import bm25_search_many
-
-    postings, doc_lens, stats = _index(spark)
-    queries = spark.createDataFrame(
-        [
-            (1, "quick brown fox"),
-            (2, "dog"),
-            (3, "market trees"),
-            (4, "zzz qqq www"),  # no hits anywhere
-        ],
-        "qid int, query string",
-    )
-    many = bm25_search_many(postings, doc_lens, stats, queries, topk=3)
-    got = {
-        (r.qid, r.doc_id): (r.score, r.rank) for r in many.collect()
-    }
-    assert not any(q == 4 for q, _ in got)  # hitless query absent
-    for qid, qtext in [(1, "quick brown fox"), (2, "dog"), (3, "market trees")]:
-        single = bm25_search(postings, doc_lens, stats, qtext, topk=3).collect()
-        assert len([k for k in got if k[0] == qid]) == len(single)
-        for rank, row in enumerate(single, start=1):
-            score, grank = got[(qid, row.doc_id)]
-            assert score == pytest.approx(row.score, rel=1e-12)
-            assert grank == rank
-
-
-def test_search_many_broadcasts_query_side(spark):
-    """Plan pin: the (qid, term) table is the broadcast side — the
-    postings never reshuffle for the term join."""
-    from spotify_etl_aws_spark.operators.bm25 import bm25_search_many
-
-    postings, doc_lens, stats = _index(spark)
-    queries = spark.createDataFrame(
-        [(1, "quick brown fox")], "qid int, query string"
-    )
-    plan = (
-        bm25_search_many(postings, doc_lens, stats, queries)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-
-
 def test_rrf_fusion_matches_python_reference(spark):
     """RRF over a BM25 ranking and a synthetic dense ranking matches
     the published formula exactly; docs present in only one ranking
     still score; ties break by doc id."""
-    from spotify_etl_aws_spark.operators.bm25 import bm25_search_many, rrf_fuse
+    from spotify_etl_aws_spark.operators.bm25 import rrf_fuse
 
     postings, doc_lens, stats = _index(spark)
-    queries = spark.createDataFrame(
-        [(1, "quick brown fox"), (2, "dog")], "qid int, query string"
+    sparse = spark.createDataFrame(
+        [
+            (qid, r.doc_id, rank)
+            for qid, q in [(1, "quick brown fox"), (2, "dog")]
+            for rank, r in enumerate(
+                bm25_search(postings, doc_lens, stats, q, topk=5).collect(), 1
+            )
+        ],
+        "qid int, doc_id bigint, rank int",
     )
-    sparse = bm25_search_many(postings, doc_lens, stats, queries, topk=5)
     # a "dense" ranking that disagrees (e.g. cosine over embeddings):
     dense = spark.createDataFrame(
         [(1, 2, 1), (1, 0, 2), (2, 2, 1), (2, 4, 2)],

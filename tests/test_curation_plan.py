@@ -190,8 +190,8 @@ def test_lm_gate_and_real_tokenizer_packing(spark, sf_dir, tmp_path):
     tokenizer the packer budgets on REAL subword counts (n_tokens ==
     len(tokens))."""
     from spotify_etl_aws_spark.operators.bpe import train_bpe
-    from spotify_etl_aws_spark.operators.lm import train_char_lm
     from spotify_etl_aws_spark.sources.readers import load_table
+    from tests.test_lm import char_lm
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     GIBBERISH_ID = 900003
@@ -207,7 +207,7 @@ def test_lm_gate_and_real_tokenizer_packing(spark, sf_dir, tmp_path):
     )
     cand = docs.unionByName(gib)
     # train both models on the CLEAN fixture corpus only
-    lm = train_char_lm(docs, order=3)
+    lm = char_lm([r.text for r in docs.collect() if r.text])
     bpe = train_bpe(docs, num_merges=60)
 
     out = build_training_corpus(
@@ -665,7 +665,7 @@ def test_lm_tercile_gate_in_ladder(spark, sf_dir, tmp_path):
     """lm_bucket_keep: the CCNet relative cut drops the worst-fluency
     tercile — gibberish lands in 'tail' and dies even when it would
     clear a loose absolute threshold; survivors ≈ two thirds."""
-    from spotify_etl_aws_spark.operators.lm import train_char_lm
+    from tests.test_lm import char_lm
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     GIB = 900004
@@ -680,7 +680,7 @@ def test_lm_tercile_gate_in_ladder(spark, sf_dir, tmp_path):
         "doc_id bigint, text string",
     )
     cand = docs.unionByName(gib)
-    lm = train_char_lm(docs, order=3)
+    lm = char_lm([r.text for r in docs.collect() if r.text])
     out = build_training_corpus(
         spark,
         cand,

@@ -99,7 +99,6 @@ def test_overlap_on_documents_fixture(spark, sf_dir):
 # ---------------- semantic (embedding-cosine) pass ------------------
 
 from spotify_etl_aws_spark.operators.decontaminate import (  # noqa: E402
-    decontaminate_semantic,
     semantic_overlap,
 )
 
@@ -133,24 +132,6 @@ def test_semantic_overlap_matches_numpy_bruteforce(spark, sf_dir):
         assert got[i] == pytest.approx(want, abs=1e-9), f"doc {i}"
 
 
-def test_semantic_decontaminate_planted(spark):
-    """An exact-copy embedding and a near-copy are dropped at 0.95;
-    an orthogonal doc and a null-vector doc survive."""
-    base = [1.0, 0.0, 0.0, 0.0]
-    near = [0.99, 0.14, 0.0, 0.0]  # cos ≈ 0.990
-    ortho = [0.0, 0.0, 1.0, 0.0]
-    bench = spark.createDataFrame([(0, base)], "bid long, embedding array<float>")
-    docs = spark.createDataFrame(
-        [(1, base), (2, near), (3, ortho), (4, None), (5, [0.0, 0.0, 0.0, 0.0])],
-        "doc_id long, embedding array<float>",
-    )
-    kept = {
-        r.doc_id
-        for r in decontaminate_semantic(docs, bench, threshold=0.95).collect()
-    }
-    assert kept == {3, 4, 5}
-
-
 def test_semantic_corpus_side_is_map_side(spark, sf_dir):
     from spotify_etl_aws_spark.sources.readers import load_table
 
@@ -181,5 +162,3 @@ def test_semantic_bench_guards(spark):
         semantic_overlap(docs, nulls)
     with pytest.raises(ValueError, match="max_bench"):
         semantic_overlap(docs, docs.crossJoin(docs.select(F.col("doc_id").alias("b"))), max_bench=0)
-    with pytest.raises(ValueError):
-        decontaminate_semantic(docs, docs, threshold=1.5)

@@ -21,9 +21,9 @@ from pyspark.sql.types import (
 
 from spotify_etl_aws_spark.operators.drift import (
     SchemaDriftError,
+    _nullable_everywhere,
     assert_no_breaking_drift,
     diff_schemas,
-    drift_gate,
 )
 
 
@@ -121,6 +121,14 @@ def test_assert_raises_with_breaking_listing():
     assert [c.kind for c in changes] == ["added"]
 
 
+def _append_gate(spark, landed_path, batch):
+    # the check incremental_bronze runs before each append
+    return assert_no_breaking_drift(
+        _nullable_everywhere(spark.read.parquet(landed_path).schema),
+        _nullable_everywhere(batch.schema),
+    )
+
+
 def test_drift_gate_against_landed_parquet(spark, tmp_path):
     landed = str(tmp_path / "bronze")
     w1 = spark.range(5).select(
@@ -134,11 +142,11 @@ def test_drift_gate_against_landed_parquet(spark, tmp_path):
     w2 = spark.range(5).select(
         F.col("id"), F.lit("y").alias("name"), F.lit(1.0).alias("score")
     )
-    changes = drift_gate(spark, landed, w2)
+    changes = _append_gate(spark, landed, w2)
     assert [(c.path, c.kind, c.breaking) for c in changes] == [
         ("score", "added", False)
     ]
     # breaking wave: name retyped -> refused before any write
     w3 = spark.range(5).select(F.col("id"), F.lit(3).alias("name"))
     with pytest.raises(SchemaDriftError):
-        drift_gate(spark, landed, w3)
+        _append_gate(spark, landed, w3)

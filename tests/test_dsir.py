@@ -1,6 +1,6 @@
 """DSIR importance resampling (operators/dsir.py): exact parity with
-an independent pure-Python reference, target-affinity of the selected
-set, retry/seed determinism, null handling, and the map-side plan pin
+an independent pure-Python reference, target-affinity of the scores,
+retry/seed determinism, null handling, and the map-side plan pin
 on the scoring stage."""
 
 from __future__ import annotations
@@ -10,10 +10,12 @@ import math
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from spotify_etl_aws_spark.operators.dsir import (
     DsirModel,
+    _gumbel_key,
     fit_dsir,
-    resample_dsir,
     resample_dsir_fraction,
     score_dsir,
 )
@@ -101,26 +103,24 @@ def test_selection_prefers_target_like_docs(spark):
     tgt, raw = _frames(spark)
     model = fit_dsir(tgt, raw, n_buckets=B, ngram_max=NG)
     scored = score_dsir(model, raw)
-    # spark-flavoured raw docs (ids 1, 3) outscore the others by a
-    # wide margin, so any seed's Gumbel(0,1) noise cannot flip them
-    # out of the top 2
-    picked = {r.doc_id for r in resample_dsir(scored, 2, seed="s").collect()}
-    assert picked == {1, 3}
+    # the spark-flavoured raw docs (ids 1, 3) score highest
+    top = scored.orderBy(F.desc("dsir_logw")).limit(2).collect()
+    assert {r.doc_id for r in top} == {1, 3}
 
 
 def test_resample_deterministic_and_seed_sensitive(spark):
     tgt, raw = _frames(spark)
     model = fit_dsir(tgt, raw, n_buckets=B, ngram_max=NG)
     scored = score_dsir(model, raw)
-    a = [r.doc_id for r in resample_dsir(scored, 4, seed="a").collect()]
-    b = [r.doc_id for r in resample_dsir(scored, 4, seed="a").collect()]
+    a = {r.doc_id for r in resample_dsir_fraction(scored, 0.5, seed="a").collect()}
+    b = {r.doc_id for r in resample_dsir_fraction(scored, 0.5, seed="a").collect()}
     assert a == b
     # the selection key is logw + Gumbel(seed, id): near-tied docs
     # reorder under a different seed (flat scores make ties common)
     flat = DsirModel(B, NG, 1.0, tuple(0.0 for _ in range(B)))
     fs = score_dsir(flat, raw)
     seeds = {
-        tuple(r.doc_id for r in resample_dsir(fs, 3, seed=s).collect())
+        frozenset(r.doc_id for r in resample_dsir_fraction(fs, 0.5, seed=s).collect())
         for s in ("a", "b", "c", "d")
     }
     assert len(seeds) > 1
@@ -137,8 +137,11 @@ def test_null_and_empty_text(spark):
     assert rows[0] is None
     assert rows[1] == 0.0
     assert rows[2] is not None and rows[2] > 0.0
-    # a NULL score can never displace a scored doc (desc NULLS LAST)
-    picked = {r.doc_id for r in resample_dsir(score_dsir(model, docs), 2).collect()}
+    # a NULL score is never selected
+    picked = {
+        r.doc_id
+        for r in resample_dsir_fraction(score_dsir(model, docs), 0.9).collect()
+    }
     assert 0 not in picked
 
 
@@ -155,7 +158,14 @@ def test_fraction_threshold_agrees_with_topk(spark):
     )
     model = fit_dsir(tgt, docs, n_buckets=B, ngram_max=NG)
     scored = score_dsir(model, docs)
-    exact = {r.doc_id for r in resample_dsir(scored, 150, seed="q").collect()}
+    exact = {
+        r.doc_id
+        for r in scored.orderBy(
+            F.desc(_gumbel_key("dsir_logw", "doc_id", "q")), "doc_id"
+        )
+        .limit(150)
+        .collect()
+    }
     approx = {
         r.doc_id
         for r in resample_dsir_fraction(
@@ -188,8 +198,6 @@ def test_bad_args_raise(spark):
         fit_dsir(empty, raw, n_buckets=B)
     model = fit_dsir(tgt, raw, n_buckets=B)
     scored = score_dsir(model, raw)
-    with pytest.raises(ValueError):
-        resample_dsir(scored, 0)
     with pytest.raises(ValueError):
         resample_dsir_fraction(scored, 1.5)
 

@@ -237,14 +237,19 @@ def test_resize_media_roundtrips_target_dimensions(spark):
     actually changed, and the resized column re-decodes through the
     standard metadata path."""
     from spotify_etl_aws_spark.operators.multimodal import (
-        fake_image_bytes,
+        encode_media,
         resize_media,
         with_media_meta,
     )
 
-    df = spark.range(6).select(
-        F.col("id").alias("doc_id"),
-        fake_image_bytes(F.col("id"), F.col("id").cast("string")).alias("media"),
+    df = encode_media(
+        spark.range(6).select(
+            F.col("id").alias("doc_id"),
+            (F.col("id") + 5).cast("int").alias("width"),
+            (F.col("id") + 4).cast("int").alias("height"),
+            F.unhex(F.md5(F.col("id").cast("string"))).alias("payload"),
+            F.when(F.col("id") % 2 == 0, F.lit("bmp")).otherwise(F.lit("png")).alias("fmt"),
+        )
     )
     resized = resize_media(df, 128, 96)
     meta = {r.doc_id: r for r in with_media_meta(resized).collect()}
@@ -256,7 +261,7 @@ def test_resize_media_roundtrips_target_dimensions(spark):
     orig = {r.doc_id: bytes(r.media) for r in df.collect()}
     assert again == first
     assert all(first[i] != orig[i] for i in range(6))
-    # distinct payloads stay distinct after resize (md5 over payload+target)
+    # distinct images stay distinct after resize
     assert len(set(first.values())) == 6
 
 
@@ -348,7 +353,7 @@ def test_bmp_codec_real_roundtrip(spark):
         bmp_row_bytes,
         decode_image,
         encode_bmp,
-        encode_media_bmp,
+        encode_media,
         resize_media,
         with_media_meta,
     )
@@ -385,8 +390,9 @@ def test_bmp_codec_real_roundtrip(spark):
         (F.col("id") + 3).cast("int").alias("width"),
         (F.col("id") + 2).cast("int").alias("height"),
         F.unhex(F.md5(F.col("id").cast("string"))).alias("payload"),
+        F.lit("bmp").alias("fmt"),
     )
-    media = encode_media_bmp(df)
+    media = encode_media(df)
     meta = {r.doc_id: r for r in with_media_meta(media).collect()}
     assert set(meta) == set(range(5))
     assert all(m.media_type == "bmp" for m in meta.values())
@@ -398,7 +404,7 @@ def test_bmp_codec_real_roundtrip(spark):
 def test_png_codec_real_roundtrip(spark):
     """The PNG half of the codec seam: encode_png writes genuine
     truecolor 8-bit PNG files (real CRCs, real zlib stream) whose size
-    matches the closed-form png_n_bytes, decode recovers pixels
+    matches the stored-block closed form, decode recovers pixels
     bit-for-bit (including foreign files using filters 1-4), resize
     re-encodes in the source format, and the mixed-format Spark kernel
     dispatches per row."""
@@ -412,7 +418,6 @@ def test_png_codec_real_roundtrip(spark):
         decode_image,
         encode_media,
         encode_png,
-        png_n_bytes,
         resize_media,
         with_media_meta,
     )
@@ -421,6 +426,12 @@ def test_png_codec_real_roundtrip(spark):
     src = rng.integers(0, 256, size=(10, 7, 3), dtype=np.uint8)
     b = encode_png(7, 10, src.tobytes())
     assert b[: len(PNG_SIG)] == PNG_SIG
+
+    def png_n_bytes(w, h):
+        # signature + IHDR + IDAT(zlib header, one stored block, raw
+        # filtered scanlines, adler) + IEND
+        return 8 + 25 + 12 + (2 + 5 + h * (1 + 3 * w) + 4) + 12
+
     assert len(b) == png_n_bytes(7, 10)
     img = decode_image(b)
     assert (img.width, img.height, img.mode) == (7, 10, "RGB")

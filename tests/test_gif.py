@@ -162,47 +162,6 @@ def test_animation_delta_frames_composite():
     assert out[1][1] == want.tobytes()
 
 
-def test_video_lane_dispatches_gif(spark):
-    """with_video_meta / sample_frames accept animated GIFs alongside
-    AVI — one binary column, per-row container dispatch."""
-    from spotify_etl_aws_spark.operators.gif import encode_gif_animation
-    from spotify_etl_aws_spark.operators.jpeg import encode_jpeg
-    from spotify_etl_aws_spark.operators.video import (
-        encode_avi_mjpeg,
-        sample_frames,
-        with_video_meta,
-    )
-
-    rng = np.random.default_rng(47)
-    gif = encode_gif_animation(
-        [
-            quantize_rgb(rng.integers(0, 256, (4, 6, 3), dtype=np.uint8)).tobytes()
-            for _ in range(5)
-        ],
-        6, 4, delay_cs=10,
-    )
-    avi = encode_avi_mjpeg(
-        [encode_jpeg(6, 4, rng.integers(0, 256, 72, dtype=np.uint8).tobytes())
-         for _ in range(3)],
-        fps=10, width=6, height=4,
-    )
-    df = spark.createDataFrame(
-        [(0, bytearray(gif)), (1, bytearray(avi))], "doc_id long, video binary"
-    )
-    meta = {r.doc_id: r for r in with_video_meta(df).collect()}
-    assert (meta[0].width, meta[0].height, meta[0].n_frames) == (6, 4, 5)
-    assert meta[0].duration_s == pytest.approx(0.5)
-    assert meta[0].fps == pytest.approx(10.0)
-    assert (meta[1].width, meta[1].height, meta[1].n_frames) == (6, 4, 3)
-
-    sampled = sample_frames(df, every=2).collect()
-    got = {(r.doc_id, r.frame_idx) for r in sampled}
-    assert got == {(0, 0), (0, 2), (0, 4), (1, 0), (1, 2)}
-    for r in sampled:
-        assert (r.width, r.height) == (6, 4)
-        assert 0.0 <= r.mean_luma <= r.max_luma <= 255.0
-
-
 def test_animation_transparency_preserves_canvas():
     """GCE transparent index: delta-frame pixels carrying the
     transparent color must leave the underlying canvas intact."""

@@ -1,6 +1,6 @@
 """Curation-heuristics operators (operators/heuristics.py): Gopher-style
 repetition stats, PII scrubbing, deterministic hash sampling, domain
-mixing. Planted fixtures with hand-computed expectations; plan pins for
+mixing, UniMax allocation. Planted fixtures with hand-computed expectations; plan pins for
 the map-side-only claims."""
 
 from __future__ import annotations
@@ -9,11 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from spotify_etl_aws_spark.operators.heuristics import (
-    domain_mix,
+    domain_mix_scaled,
     repetition_gate,
     repetition_stats,
     scrub_pii,
-    stratified_sample,
+    stratified_sample_rates,
 )
 
 
@@ -98,74 +98,35 @@ def test_scrub_pii(spark):
     assert rows[2].pii_total == 0 and rows[2].text == "no pii here"
 
 
-def test_stratified_sample_deterministic_and_faithful(spark):
-    df = spark.range(20000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 4 == 0, "web").otherwise("books").alias("src"),
-    )
-    frac = {"web": 0.5, "books": 0.1}
-    s1 = stratified_sample(df, frac, "src")
-    s2 = stratified_sample(df, frac, "src")
-    assert sorted(r.doc_id for r in s1.collect()) == sorted(
-        r.doc_id for r in s2.collect()
-    )
-    got = {r.src: r.n for r in s1.groupBy("src").agg(F.count("*").alias("n")).collect()}
-    assert got["web"] == pytest.approx(0.5 * 5000, rel=0.05)
-    assert got["books"] == pytest.approx(0.1 * 15000, rel=0.05)
-    # different salt re-deals membership
-    s3 = stratified_sample(df, frac, "src", salt="v2")
-    assert sorted(r.doc_id for r in s3.collect()) != sorted(
-        r.doc_id for r in s1.collect()
-    )
-    # map-side only
-    plan = s1._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    with pytest.raises(ValueError, match="fraction"):
-        stratified_sample(df, {"web": 1.5}, "src")
-
-
 def test_domain_mix_temperatures(spark):
     df = spark.range(12000).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 6 == 0, "rare").otherwise("common").alias("src"),
     )
+
+    def mix(t):
+        out, rates = domain_mix_scaled(df, "src", temperature=t)
+        return out, {r.src: r.rate for r in rates.collect()}
+
     # T=1: natural mix — every rate is 1.0, nothing dropped
-    full, rates = domain_mix(df, "src", temperature=1.0)
-    assert rates == {"rare": 1.0, "common": 1.0}
+    full, rates = mix(1.0)
+    assert rates == pytest.approx({"rare": 1.0, "common": 1.0}, abs=1e-12)
     assert full.count() == 12000
     # T=0: equalize — rare keeps all, common downsamples to rare's size
-    eq, rates0 = domain_mix(df, "src", temperature=0.0)
+    eq, rates0 = mix(0.0)
     assert rates0["rare"] == pytest.approx(1.0)
     assert rates0["common"] == pytest.approx(2000 / 10000)
     got = {r.src: r.n for r in eq.groupBy("src").agg(F.count("*").alias("n")).collect()}
     assert got["rare"] == 2000
     assert got["common"] == pytest.approx(2000, rel=0.1)
     # 0<T<1 flattens monotonically: common's rate between T=0 and T=1
-    _, rates_half = domain_mix(df, "src", temperature=0.5)
+    _, rates_half = mix(0.5)
     assert rates0["common"] < rates_half["common"] < 1.0
-    with pytest.raises(ValueError, match="temperature"):
-        domain_mix(df, "src", temperature=-1)
-
-
-def test_domain_mix_scaled_matches_dict_variant(spark):
-    """The broadcast-join path must agree row-for-row with the driver-
-    dict path at equal inputs — same hash, same rounding."""
-    from spotify_etl_aws_spark.operators.heuristics import domain_mix_scaled
-
-    df = spark.range(6000).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("d"), (F.col("id") % 9).cast("string")).alias("src"),
+    # deterministic: the same rows on every call
+    again, _ = mix(0.0)
+    assert sorted(r.doc_id for r in again.collect()) == sorted(
+        r.doc_id for r in eq.collect()
     )
-    for temp in (0.0, 0.5, 1.0):
-        full_dict, rates_dict = domain_mix(df, "src", temperature=temp)
-        full_df, rates_df = domain_mix_scaled(df, "src", temperature=temp)
-        rd = {r["src"]: r["rate"] for r in rates_df.collect()}
-        assert set(rd) == set(rates_dict)
-        for k, v in rates_dict.items():
-            assert rd[k] == pytest.approx(v, abs=1e-12), (temp, k)
-        assert sorted(r.doc_id for r in full_df.collect()) == sorted(
-            r.doc_id for r in full_dict.collect()
-        ), temp
 
 
 def test_domain_mix_scaled_high_cardinality_web_domains(spark):
@@ -173,8 +134,6 @@ def test_domain_mix_scaled_high_cardinality_web_domains(spark):
     10^7). Deterministic across calls, fraction-faithful per the rate
     table, and the corpus apply side is a BROADCAST join — no driver
     dict, no per-stratum expression chain, no corpus shuffle."""
-    from spotify_etl_aws_spark.operators.heuristics import domain_mix_scaled
-
     n_domains = 20_000
     # skewed domain sizes: domain d gets 1 + (d % 13) docs
     df = spark.range(140_000).select(
@@ -205,11 +164,6 @@ def test_domain_mix_scaled_high_cardinality_web_domains(spark):
 
 
 def test_domain_mix_scaled_empty_and_bad_inputs(spark):
-    from spotify_etl_aws_spark.operators.heuristics import (
-        domain_mix_scaled,
-        stratified_sample_rates,
-    )
-
     empty = spark.createDataFrame([], "doc_id bigint, src string")
     out, rates = domain_mix_scaled(empty, "src", temperature=0.5)
     assert out.count() == 0 and rates.count() == 0
@@ -223,34 +177,27 @@ def test_domain_mix_scaled_empty_and_bad_inputs(spark):
         stratified_sample_rates(df, bad, "src").count()
 
 
-def test_rates_df_midpoint_rounding_matches_dict_variant(spark):
-    """Review fix: the DataFrame variant must use HALF_EVEN (bround)
-    like Python's round() in the dict variant — at a .5-midpoint rate
-    both must keep the same rows."""
-    from spotify_etl_aws_spark.operators.heuristics import (
-        stratified_sample_rates,
-    )
-
+def test_rates_df_midpoint_rounds_half_even(spark):
+    """At a .5-midpoint rate the threshold rounds HALF_EVEN: rate * 1e6
+    buckets = 2.5 keeps exactly the rows whose bucket is below 2."""
     df = spark.range(4000).select(
         F.col("id").alias("doc_id"), F.lit("d").alias("src")
     )
-    rate = 2.5e-6  # rate * 1e6 buckets = 2.5 — the midpoint
-    dict_rows = sorted(
-        r.doc_id for r in stratified_sample(df, {"d": rate}, "src").collect()
-    )
+    rate = 2.5e-6
+    bucket = F.pmod(F.xxhash64(F.lit("v1"), F.col("doc_id")), F.lit(1_000_000))
+    want = sorted(r.doc_id for r in df.filter(bucket < 2).collect())
     rates = spark.createDataFrame([("d", rate)], "src string, rate double")
     df_rows = sorted(
         r.doc_id
         for r in stratified_sample_rates(df, rates, "src").collect()
     )
-    assert df_rows == dict_rows
+    assert df_rows == want
 
 
 # ---------------------------- UniMax -------------------------------
 
 from spotify_etl_aws_spark.operators.heuristics import (  # noqa: E402
     unimax_allocation,
-    unimax_mix,
 )
 
 
@@ -278,96 +225,6 @@ def test_unimax_allocation_bad_args():
         unimax_allocation({"a": 1}, 10, 0.0)
     with pytest.raises(ValueError):
         unimax_allocation({"a": -5}, 10, 2.0)
-
-
-def _unimax_corpus(spark):
-    rows = []
-    for i in range(20):
-        rows.append((i, "lo"))  # small stratum: gets upweighted
-    for i in range(20, 420):
-        rows.append((i, "hi"))  # big stratum: gets downsampled
-    return spark.createDataFrame(rows, "doc_id long, lang string")
-
-
-def test_unimax_mix_epoch_semantics(spark):
-    df = _unimax_corpus(spark)
-    # budget 240, cap 4 epochs: share 120 each; lo caps at 80 (20*4),
-    # surplus to hi -> hi gets 160. rates: lo=4.0, hi=0.4
-    out, rates = unimax_mix(df, "lang", budget=240, max_epochs=4.0)
-    assert rates == {"lo": 4.0, "hi": 0.4}
-    rows = out.collect()
-    lo = [r for r in rows if r.lang == "lo"]
-    hi = [r for r in rows if r.lang == "hi"]
-    # integer rate: every lo doc appears in epochs 0..3 exactly
-    assert len(lo) == 80
-    by_doc = {}
-    for r in lo:
-        by_doc.setdefault(r.doc_id, []).append(r.epoch)
-    assert all(sorted(v) == [0, 1, 2, 3] for v in by_doc.values())
-    # fractional rate: hash-thresholded single epoch, ~40% of 400
-    assert all(r.epoch == 0 for r in hi)
-    assert len({r.doc_id for r in hi}) == len(hi)
-    assert 120 <= len(hi) <= 200  # 1M-bucket hash ≈ 160 ± noise
-
-
-def test_unimax_mix_deterministic_and_token_weighted(spark):
-    df = _unimax_corpus(spark).withColumn("n_tok", F.lit(10.0))
-    a, ra = unimax_mix(df, "lang", 2400, 4.0, weight_col="n_tok")
-    b, rb = unimax_mix(df, "lang", 2400, 4.0, weight_col="n_tok")
-    assert ra == rb
-    ka = sorted((r.doc_id, r.epoch) for r in a.collect())
-    kb = sorted((r.doc_id, r.epoch) for r in b.collect())
-    assert ka == kb
-    # uniform 10-token docs: token-weighted rates equal row-weighted
-    # rates at 10x the budget
-    _, row_rates = unimax_mix(df, "lang", 240, 4.0)
-    assert ra == row_rates
-
-
-def test_unimax_mix_corpus_side_stays_map_side(spark):
-    df = _unimax_corpus(spark)
-    out, _ = unimax_mix(df, "lang", budget=240)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # broadcast-join the rate table; the corpus never hash-exchanges
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan
-
-
-def test_unimax_composes_with_training_order(spark):
-    """The epoch column exists so the order shuffler can DISPERSE a
-    doc's repeats instead of replaying them back-to-back: keying the
-    deterministic order on (doc_id, epoch) interleaves copies."""
-    from spotify_etl_aws_spark.operators.ordering import training_order
-
-    df = _unimax_corpus(spark)
-    out, _ = unimax_mix(df, "lang", budget=240, max_epochs=4.0)
-    # composite order id: epoch copies of one doc get distinct keys
-    keyed = out.withColumn(
-        "order_id", F.col("doc_id") * 8 + F.col("epoch")
-    )
-    ordered = [
-        (r.doc_id, r.epoch)
-        for r in training_order(keyed, seed=3, id_col="order_id").collect()
-    ]
-    again = [
-        (r.doc_id, r.epoch)
-        for r in training_order(keyed, seed=3, id_col="order_id").collect()
-    ]
-    assert ordered == again  # deterministic epoch order
-    # each lo doc appears 4x; its copies are spread out, not adjacent
-    positions: dict[int, list[int]] = {}
-    for pos, (d, _e) in enumerate(ordered):
-        positions.setdefault(d, []).append(pos)
-    lo_docs = [p for d, p in positions.items() if len(p) == 4]
-    assert lo_docs
-    adjacent_runs = sum(
-        1
-        for p in lo_docs
-        for a, b in zip(p, p[1:])
-        if b == a + 1
-    )
-    # hash dispersal: of the 60 copy-gaps, at most a hashful collide
-    assert adjacent_runs <= 6
 
 
 # ------------------------ Gopher quality rules ----------------------

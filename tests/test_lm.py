@@ -1,7 +1,6 @@
-"""Char n-gram LM perplexity filter (operators/lm.py): count parity
-against a pure-python recount, hand-computed smoothing, the
-gibberish-vs-fluent separation the filter exists for, and the
-map-side-only scoring plan."""
+"""Char n-gram LM perplexity filter (operators/lm.py): hand-computed
+smoothing, the gibberish-vs-fluent separation the filter exists for,
+and the map-side-only scoring plan."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ from spotify_etl_aws_spark.operators.lm import (
     _doc_log_ppl,
     perplexity_gate,
     score_perplexity,
-    train_char_lm,
 )
 
 CLEAN = [
@@ -42,15 +40,16 @@ def _py_counts(texts: list[str], n: int) -> Counter:
     return c
 
 
-def test_trained_counts_match_python_recount(spark):
-    df = spark.createDataFrame([(t,) for t in CLEAN], "text string")
-    m = train_char_lm(df, order=3, alpha=0.5)
-    assert m.ngram_counts == dict(_py_counts(CLEAN, 3))
-    assert m.context_counts == dict(_py_counts(CLEAN, 2))
-    assert m.n_chars == len(_py_counts(CLEAN, 1))
-    # determinism under repartition
-    m2 = train_char_lm(df.repartition(5), order=3, alpha=0.5)
-    assert m2.ngram_counts == m.ngram_counts
+def char_lm(texts: list[str], order: int = 3, alpha: float = 0.1) -> CharLmModel:
+    """The model a count over ``texts`` fits: every order-n gram and
+    order-(n-1) context, add-alpha over the observed alphabet."""
+    return CharLmModel(
+        order,
+        dict(_py_counts(texts, order)),
+        dict(_py_counts(texts, order - 1)),
+        len(_py_counts(texts, 1)) or 1,
+        alpha,
+    )
 
 
 def test_hand_computed_score():
@@ -73,8 +72,7 @@ def test_hand_computed_score():
 
 
 def test_gibberish_scores_worse_and_gate(spark):
-    train = spark.createDataFrame([(t,) for t in CLEAN], "text string")
-    m = train_char_lm(train, order=3)
+    m = char_lm(CLEAN)
     cand = spark.createDataFrame(
         [
             (0, "the quick brown dog jumps over the lazy fox"),  # fluent
@@ -102,8 +100,7 @@ def test_gibberish_scores_worse_and_gate(spark):
 
 
 def test_kernel_matches_driver_scorer(spark):
-    train = spark.createDataFrame([(t,) for t in CLEAN], "text string")
-    m = train_char_lm(train, order=3)
+    m = char_lm(CLEAN)
     cand = spark.createDataFrame(
         [(i, t) for i, t in enumerate(CLEAN)], "doc_id long, text string"
     )
@@ -114,22 +111,8 @@ def test_kernel_matches_driver_scorer(spark):
     assert all(v < 4.0 for v in got.values())
 
 
-def test_top_k_cap_and_validation(spark):
-    df = spark.createDataFrame([(t,) for t in CLEAN], "text string")
-    m = train_char_lm(df, order=2, top_k=5)
-    assert len(m.ngram_counts) == 5
-    # the cap keeps the MOST frequent grams
-    full = _py_counts(CLEAN, 2)
-    kept_min = min(m.ngram_counts.values())
-    dropped = [v for g, v in full.items() if g not in m.ngram_counts]
-    assert all(v <= kept_min for v in dropped)
-    with pytest.raises(ValueError, match="order"):
-        train_char_lm(df, order=1)
-
-
 def test_null_text_scores_null_and_is_gated(spark):
-    train = spark.createDataFrame([(t,) for t in CLEAN], "text string")
-    m = train_char_lm(train, order=3)
+    m = char_lm(CLEAN)
     cand = spark.createDataFrame(
         [(0, CLEAN[0]), (1, None)], "doc_id long, text string"
     )

@@ -7,8 +7,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from spotify_etl_aws_spark.operators.packing import pack_sequences, pack_stats
+from spotify_etl_aws_spark.operators.packing import pack_sequences
 from spotify_etl_aws_spark.sources.readers import load_table
+
+
+def pack_stats(packed):
+    return packed.groupBy("pack_id").agg(
+        F.count("*").alias("n_docs"), F.sum("n_tokens").alias("pack_tokens")
+    )
 
 
 def _greedy_reference(items: list[tuple[int, int]], budget: int) -> dict[int, int]:
@@ -80,7 +86,7 @@ def test_packing_invariants_on_documents(spark, sf_dir):
     assert len(rows) == n_docs and len({r.doc_id for r in rows}) == n_docs
 
     # no multi-doc pack exceeds the budget; oversize docs sit alone
-    stats = pack_stats(packed, budget).collect()
+    stats = pack_stats(packed).collect()
     for s in stats:
         if s.n_docs > 1:
             assert s.pack_tokens <= budget, s
@@ -108,7 +114,7 @@ def test_bounded_waste_across_shards(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, n_tokens bigint")
     budget = 1000  # 3 docs/pack, shard_span=100 -> 34 packs/shard
     stats = pack_stats(
-        pack_sequences(docs, budget=budget, shard_span=100), budget
+        pack_sequences(docs, budget=budget, shard_span=100)
     ).collect()
     partial = [s for s in stats if s.pack_tokens < 900]
     # 10 shards -> at most 10 partial (final) packs

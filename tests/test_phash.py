@@ -16,7 +16,6 @@ from spotify_etl_aws_spark.operators.phash import (
     GRID_COLS,
     GRID_ROWS,
     HASH_BITS,
-    band_bucket_sizes,
     dhash_bytes,
     dhash_media,
     hamming_near_pairs,
@@ -196,14 +195,6 @@ def test_skew_valve_never_emits_wrong_pairs(spark):
     # pairs entirely outside the hot family survive untouched
     cold = {(a, b, h) for a, b, h in brute if a >= 100 and b >= 100}
     assert {(a, b, h) for a, b, h in capped if a >= 100} == cold
-
-
-def test_band_bucket_sizes_census(spark):
-    df = spark.createDataFrame(
-        [(i, 0) for i in range(12)], "doc_id long, phash long"
-    )
-    top = band_bucket_sizes(df).limit(1).collect()[0]
-    assert top.n == 12 and top.band_val == 0
 
 
 def test_plan_has_no_cartesian(spark):

@@ -1,6 +1,6 @@
 """Column profiling operators (operators/profile.py) and their
 declared lanes: exact numeric profiles on tiny frames with nulls,
-injectivity/completeness semantics, the HLL posture's error bound,
+injectivity semantics, the HLL posture's error bound,
 and the quantile-PSI contract's theorem booleans."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from spotify_etl_aws_spark.operators.profile import (
-    profile_completeness,
     profile_numeric,
     stack_carriers,
 )
@@ -35,18 +34,6 @@ def test_profile_numeric_exact_values(spark, tiny):
     assert a.mean_v == 15 / 4
     assert (b.n_rows, b.n_null, b.min_v, b.max_v, b.sum_v) == (4, 2, 7, 7, 14)
     assert b.mean_v == 14 / 2  # mean over NON-NULL count, not n_rows
-
-
-def test_profile_completeness_exact(spark, tiny):
-    got = {
-        r.col_name: r
-        for r in profile_completeness(
-            tiny,
-            {"a": F.col("a").cast("string"), "b": F.col("b").cast("string")},
-        ).collect()
-    }
-    assert (got["a"].n_null, got["a"].n_distinct) == (0, 3)
-    assert (got["b"].n_null, got["b"].n_distinct) == (2, 1)
 
 
 def test_stack_is_map_side(spark, tiny):

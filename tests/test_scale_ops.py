@@ -224,10 +224,14 @@ def test_embedding_neardup_reps_are_component_minima(spark, sf_dir):
     are a fixpoint (rep of rep == rep), both endpoints of every verified
     within-cell pair land in the same cluster, and the fixture yields a
     non-vacuous result (at least one genuine duplicate)."""
+    from spotify_etl_aws_spark.operators.vector_ops import (
+        assign_cells_arrow,
+        cell_cosine_pairs_arrow,
+    )
     from spotify_etl_aws_spark.queries.vector import (
         EMB_DUP_THRESHOLD,
-        _cell_pairs,
-        _ivf_assignments,
+        _embeddings,
+        _learned_centroids,
         dedup_embedding_cosine,
     )
 
@@ -239,11 +243,14 @@ def test_embedding_neardup_reps_are_component_minima(spark, sf_dir):
     assert len(rep) == n_vecs
     assert all(label <= vid for vid, label in rep.items())
     assert all(rep[label] == label for label in rep.values())
-    pairs = _cell_pairs(
-        _ivf_assignments(spark, sf_dir), EMB_DUP_THRESHOLD
+    pairs = cell_cosine_pairs_arrow(
+        assign_cells_arrow(
+            _embeddings(spark, sf_dir), _learned_centroids(spark, sf_dir)
+        ),
+        EMB_DUP_THRESHOLD,
     ).collect()
     assert pairs, "fixture has no within-cell near-dup pairs — vacuous test"
-    assert all(rep[p.vec_a] == rep[p.vec_b] for p in pairs)
+    assert all(rep[p.doc_a] == rep[p.doc_b] for p in pairs)
 
 
 def test_jaccard_max_df_bounds_hot_shingle_expansion(spark):

@@ -325,88 +325,6 @@ class TestStreamingHeavyHitters:
             streaming_heavy_hitters(df, "k", n_buckets=0)
 
 
-class TestSketchedHotKeys:
-    def test_matches_exact_detector_and_types(self, spark):
-        """On a planted skew column the sketched detector finds the
-        same hot keys as the exact groupBy detector, at the ORIGINAL
-        key type (salting predicates compare typed literals)."""
-        from spotify_etl_aws_spark.operators.skew import (
-            detect_hot_keys,
-            detect_hot_keys_sketched,
-        )
-
-        rows = [(1,)] * 400 + [(2,)] * 200 + [(i,) for i in range(100, 500)]
-        df = spark.createDataFrame(rows, "k int").repartition(4)
-        exact = sorted(detect_hot_keys(df, "k", min_fraction=0.1))
-        sketched = sorted(
-            detect_hot_keys_sketched(df, "k", min_fraction=0.1)
-        )
-        assert exact == [1, 2]
-        assert sketched == exact
-        assert all(isinstance(k, int) for k in sketched)
-
-    def test_null_keys_share_one_denominator(self, spark):
-        """NULL-key rows are excluded from BOTH detectors' totals: a
-        borderline key that clears min_fraction only over the non-null
-        denominator must be hot in both (a NULL key never matches an
-        equi-join, so it can never be a join hot key)."""
-        from spotify_etl_aws_spark.operators.skew import (
-            detect_hot_keys,
-            detect_hot_keys_sketched,
-        )
-
-        # 30 "hot" of 95 non-null (31.6% > 0.3) but 30/145 = 20.7%
-        # with the 50 NULL rows in the denominator — the old exact
-        # detector missed it while the sketched one found it
-        rows = (
-            [("hot",)] * 30
-            + [(f"t{i}",) for i in range(65)]
-            + [(None,)] * 50
-        )
-        df = spark.createDataFrame(rows, "k string").repartition(3)
-        exact = detect_hot_keys(df, "k", min_fraction=0.3)
-        sketched = detect_hot_keys_sketched(df, "k", min_fraction=0.3)
-        assert exact == ["hot"]
-        assert sketched == exact
-
-    def test_no_false_negatives_at_tiny_capacity(self, spark):
-        """Even with a capacity far too small for the tail, every
-        truly-hot key survives (the MG undercount certificate widens
-        the filter); extras below threshold are allowed."""
-        from spotify_etl_aws_spark.operators.skew import (
-            detect_hot_keys_sketched,
-        )
-
-        rows = [("hot",)] * 500 + [(f"t{i}",) for i in range(400)]
-        df = spark.createDataFrame(rows, "k string").repartition(3)
-        got = detect_hot_keys_sketched(
-            df, "k", min_fraction=0.3, capacity=8
-        )
-        assert "hot" in got
-
-    def test_empty_input(self, spark):
-        from spotify_etl_aws_spark.operators.skew import (
-            detect_hot_keys_sketched,
-        )
-
-        df = spark.createDataFrame([], "k int")
-        assert detect_hot_keys_sketched(df, "k") == []
-
-    def test_raises_when_capacity_cannot_certify(self, spark):
-        """A caller-supplied capacity too small for the stream makes
-        the undercount certificate exceed the hot-key threshold — the
-        detector must refuse rather than silently drop a possibly-hot
-        evicted key."""
-        from spotify_etl_aws_spark.operators.skew import (
-            detect_hot_keys_sketched,
-        )
-
-        rows = [(f"t{i}",) for i in range(900)] + [("hot",)] * 100
-        df = spark.createDataFrame(rows, "k string").repartition(2)
-        with pytest.raises(ValueError, match="capacity .* too small"):
-            detect_hot_keys_sketched(df, "k", min_fraction=0.05, capacity=1)
-
-
 class TestPlans:
     def test_countmin_single_shuffle(self, spark):
         """The sketch build shuffles once, on the (r, c) cell world —
@@ -437,32 +355,6 @@ class TestPlans:
 
 
 class TestHll:
-    def test_merged_waves_equal_direct_build(self, spark):
-        """The union of two wave sketches estimates the concatenated
-        stream within the shared HLL error envelope (exact register
-        equality does not survive DataSketches' sparse-mode
-        promotion)."""
-        from spotify_etl_aws_spark.operators.sketches import (
-            hll_distinct_sketch,
-            hll_estimate,
-            hll_merge,
-        )
-
-        wave1 = _terms(spark, [f"t{i}" for i in range(800)] + ["x"] * 50)
-        wave2 = _terms(spark, [f"t{i}" for i in range(400, 1200)] + ["y"] * 9)
-        s1 = hll_distinct_sketch(wave1, "term")
-        s2 = hll_distinct_sketch(wave2, "term")
-        merged = hll_merge(s1.unionByName(s2))
-        direct = hll_distinct_sketch(wave1.unionByName(wave2), "term")
-        got = hll_estimate(merged).collect()[0]["estimate"]
-        want = hll_estimate(direct).collect()[0]["estimate"]
-        # sparse-mode promotion differs under union vs direct build, so
-        # the two estimates agree to the error envelope, not exactly
-        assert abs(got - want) <= 1202 * 0.02
-        # ~1.6% standard error at lg_k=12; true distinct = 1202
-        assert abs(got - 1202) <= 1202 * 0.05
-        assert abs(want - 1202) <= 1202 * 0.05
-
     def test_grouped_sketches(self, spark):
         from spotify_etl_aws_spark.operators.sketches import (
             hll_distinct_sketch,

@@ -1,6 +1,6 @@
-"""Source/sink coverage (SURVEY.md §2.1 S1-S9): REST source shim with
-injected transport, JSON sink round-trip, parquet + partitioned sinks
-(with a partition-pruning plan check), and the catalog CTAS sink."""
+"""Sink coverage (SURVEY.md §2.1 S1-S9): parquet + partitioned sinks
+(with a partition-pruning plan check), the staged dim upsert, the
+codecs' foreign-file decode paths and the epoch commit protocol."""
 
 from __future__ import annotations
 
@@ -8,88 +8,12 @@ import os
 
 from pyspark.sql import functions as F
 
-from spotify_etl_aws_spark.operators.shred import shred
-from spotify_etl_aws_spark.schemas import RAW_PLAYLIST
 from spotify_etl_aws_spark.sources.readers import load_table
-from spotify_etl_aws_spark.sources.rest import RestClient, ingest_playlists
 from spotify_etl_aws_spark.sources.sinks import (
-    save_as_table,
     upsert_unpartitioned,
-    write_json,
     write_parquet,
     write_partitioned,
 )
-
-from .test_medallion import _album, _artist, _item
-
-
-def _payload(playlist_id: str, n_tracks: int = 3) -> dict:
-    return {
-        "id": playlist_id,
-        "name": f"Playlist {playlist_id}",
-        "description": "rest fixture",
-        "owner": {"id": "owner-1"},
-        "followers": {"total": 42},
-        "public": True,
-        "snapshot_id": "snap",
-        "images": [],
-        "tracks": {
-            "total": n_tracks,
-            "limit": 100,
-            "offset": 0,
-            "items": [_item(i, _album(i), [_artist(i)]) for i in range(n_tracks)],
-        },
-    }
-
-
-class FakeTransport:
-    """(url, params, headers) -> (status, payload); first call with a
-    stale token returns 401 to exercise the refresh-retry path."""
-
-    def __init__(self):
-        self.calls: list[tuple[str, dict, dict]] = []
-
-    def __call__(self, url, params, headers):
-        self.calls.append((url, params, headers))
-        if headers["Authorization"] == "Bearer stale":
-            return 401, {}
-        pid = url.rsplit("/", 1)[-1]
-        return 200, _payload(pid)
-
-
-def test_rest_client_refreshes_token_on_401(spark):
-    tokens = iter(["stale", "fresh"])
-    transport = FakeTransport()
-    client = RestClient("https://api.example/v1", lambda: next(tokens), transport)
-    df = ingest_playlists(spark, client, ["PL1", "PL2"])
-    assert df.count() == 2
-    # PL1 hit 401 once and was retried with the refreshed token
-    assert len(transport.calls) == 3
-    assert transport.calls[1][2]["Authorization"] == "Bearer fresh"
-    assert df.schema == RAW_PLAYLIST
-
-
-def test_rest_source_feeds_shredder(spark):
-    transport = FakeTransport()
-    client = RestClient("https://api.example/v1", lambda: "fresh", transport)
-    raw = ingest_playlists(spark, client, ["PL9"])
-    bronze = shred(raw)
-    assert bronze["tracks"].count() == 3
-    assert bronze["playlists"].count() == 1
-    assert {r.playlist_id for r in bronze["tracks"].collect()} == {"PL9"}
-
-
-def test_json_sink_roundtrip(spark, tmp_path):
-    transport = FakeTransport()
-    client = RestClient("https://api.example/v1", lambda: "fresh", transport)
-    raw = ingest_playlists(spark, client, ["PL1"])
-    path = str(tmp_path / "raw_json")
-    write_json(raw, path)
-    back = spark.read.schema(RAW_PLAYLIST).json(path)
-    assert back.count() == 1
-    row = back.collect()[0]
-    assert row.id == "PL1" and row.followers.total == 42
-    assert len(row.tracks["items"]) == 3
 
 
 def test_parquet_sink_roundtrip(spark, sf_dir, tmp_path):
@@ -177,14 +101,6 @@ def test_unpartitioned_upsert_finishes_a_swap_a_crash_cut_short(spark, tmp_path)
     upsert_unpartitioned(spark.createDataFrame([("c", 3)], schema), path, ["k"])
     assert rows() == [("a", 1), ("b", 20), ("c", 3)]
     assert os.listdir(tmp_path) == ["dim"]
-
-
-def test_save_as_table_catalog_roundtrip(spark, sf_dir):
-    region = load_table(spark, sf_dir, "region")
-    save_as_table(region, "gold_region")
-    back = spark.table("gold_region")
-    assert sorted(back.collect()) == sorted(region.collect())
-    assert "gold_region" in [t.name for t in spark.catalog.listTables()]
 
 
 def test_palette_png_decodes_with_filters():

@@ -61,55 +61,6 @@ def test_split_rejects_bad_weights(spark):
         assign_split(df, {"train": 0.5, "test": 0.1})
 
 
-def test_split_leakage_pairs_finds_cross_split_neardups(spark):
-    from spotify_etl_aws_spark.operators.splits import (
-        assign_split,
-        split_leakage_pairs,
-    )
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the farmer "
-        "watches from the porch with a warm cup of coffee in the morning"
-    )
-    near = base.replace("warm cup of coffee", "hot mug of tea")
-    rows = [(i, f"unique filler document number {i} " * 5) for i in range(30)]
-    # force a near-dup pair onto OPPOSITE sides by searching ids that
-    # hash into different splits
-    df0 = spark.createDataFrame(rows, "doc_id long, text string")
-    probe = assign_split(
-        spark.createDataFrame(
-            [(i,) for i in range(1000, 1200)], "doc_id long"
-        ),
-        {"train": 0.5, "val": 0.5},
-    )
-    by_split = {r.split: r.doc_id for r in probe.collect()}
-    a, b = by_split["train"], by_split["val"]
-    docs = df0.unionByName(
-        spark.createDataFrame([(a, base), (b, near)], "doc_id long, text string")
-    )
-    split_df = assign_split(docs, {"train": 0.5, "val": 0.5})
-    leaks = split_leakage_pairs(split_df, threshold=0.4).collect()
-    assert len(leaks) == 1
-    (leak,) = leaks
-    assert {leak.doc_a, leak.doc_b} == {a, b}
-    assert {leak.split_a, leak.split_b} == {"train", "val"}
-    assert leak.jaccard >= 0.4
-
-    # a clean corpus (same split for the pair) reports nothing: two
-    # DISTINCT ids that both hash into 'train'
-    train_ids = [r.doc_id for r in probe.collect() if r.split == "train"]
-    t1, t2 = train_ids[0], train_ids[1]
-    same = df0.unionByName(
-        spark.createDataFrame(
-            [(t1, base), (t2, near)], "doc_id long, text string"
-        )
-    )
-    clean = split_leakage_pairs(
-        assign_split(same, {"train": 0.5, "val": 0.5}), threshold=0.4
-    )
-    assert clean.count() == 0
-
-
 def test_leakage_audit_and_cluster_safe_lanes(spark, sf_dir):
     """The declared hygiene pair: the id-hash audit finds real
     straddling near-dup pairs at fixture scale, and the cluster-safe

@@ -1,25 +1,10 @@
-"""Composite-state streaming profile operators
+"""Composite-state streaming profile operator
 (``streaming/stateful.py``): the declared GroupState lane's fold
-semantics, and the transformWithStateInPandas twin's documented
-environment seam."""
+semantics."""
 
 from __future__ import annotations
 
-import pytest
-
-from spotify_etl_aws_spark.streaming.stateful import (
-    user_type_profiles,
-    user_type_profiles_gs,
-)
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+from spotify_etl_aws_spark.streaming.stateful import user_type_profiles_gs
 
 
 def test_gs_profiles_equal_batch_aggregate(spark, sf_dir):
@@ -54,52 +39,3 @@ def test_gs_profiles_equal_batch_aggregate(spark, sf_dir):
         want[r["user_id"]] = (n + r["count"], ntypes + 1, top)
     want = {u: (n, t, top[1]) for u, (n, t, top) in want.items()}
     assert got == want
-
-
-def test_tws_twin_builds_plan(spark, sf_dir):
-    """The transformWithStateInPandas twin must construct its lazy
-    plan with the contracted schema in ANY environment — the protobuf
-    requirement bites only at stream start (the documented seam)."""
-    from spotify_etl_aws_spark.streaming.pipeline import read_table_stream
-
-    src = read_table_stream(spark, sf_dir, "events").select(
-        "user_id", "event_type"
-    )
-    df = user_type_profiles(src)
-    assert [f.name for f in df.schema.fields] == [
-        "user_id",
-        "n_events",
-        "n_types",
-        "top_type",
-    ]
-    assert df.isStreaming
-
-
-def test_tws_twin_executes_or_hits_documented_seam(spark, sf_dir):
-    """With protobuf present the twin must produce the batch-equal
-    profile; without it the stream must fail with EXACTLY the
-    documented driver-worker init error — any other failure mode means
-    the seam docstring is stale."""
-    from spotify_etl_aws_spark.streaming.pipeline import (
-        read_table_stream,
-        run_available_now,
-    )
-
-    src = read_table_stream(spark, sf_dir, "events").select(
-        "user_id", "event_type"
-    )
-    if _has_protobuf():
-        out = run_available_now(
-            user_type_profiles(src), "tws_real", output_mode="update"
-        )
-        assert out.count() > 0
-    else:
-        with pytest.raises(Exception) as exc:
-            run_available_now(
-                user_type_profiles(src), "tws_real", output_mode="update"
-            )
-        msg = str(exc.value)
-        assert (
-            "STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE" in msg
-            or "TransformWithState" in msg
-        ), msg[:500]
