@@ -352,8 +352,9 @@ def stratified_sample_rates(
     join — strata absent from ``rates`` are dropped), then a
     deterministic hash threshold keeps
     ``pmod(xxhash64(salt, id), B) < bround(rate*B)``. The corpus side
-    never shuffles: a broadcast hash join is map-side. Out-of-range rates surface as a loud runtime failure rather than a
-    silent over-sample (raise_error branch, checked per row on the
+    never shuffles: a broadcast hash join is map-side. Out-of-range
+    rates surface as a loud runtime failure rather than a silent
+    over-sample (raise_error branch, checked per row on the
     broadcast-small rate table)."""
     checked = F.when(
         (F.col(rate_col) < 0) | (F.col(rate_col) > 1),

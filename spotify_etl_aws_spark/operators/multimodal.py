@@ -392,9 +392,9 @@ def encode_media(
     """Mixed-format media encode via mapInPandas: (id, width, height,
     payload, fmt) -> (id, media binary), dispatching per row on ``fmt``
     ('bmp' | 'png' | 'jpeg'), the per-item codec chosen by a column —
-    the same Arrow-batched lane a PIL/ffmpeg encoder runs in, and the shape a real
-    corpus has, where media formats are heterogeneous within one
-    table."""
+    the same Arrow-batched lane a PIL/ffmpeg encoder runs in, and the
+    shape a real corpus has, where media formats are heterogeneous
+    within one table."""
     schema = f"{id_col} bigint, media binary"
 
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

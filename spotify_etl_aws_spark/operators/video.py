@@ -18,7 +18,7 @@ libraries this container lacks — ``parse_avi`` raises
 call ffmpeg/PyAV.
 
 The reference's domain carries media URLs but never the media itself
-(the reference's `ingestion/ingestion/models/model.py:10,19` — image
+(`ingestion/ingestion/models/model.py:10,19` — image
 URLs; `playlist_model.py:12-13`); this lane is what carrying video
 payloads through the same pipeline looks like.
 """

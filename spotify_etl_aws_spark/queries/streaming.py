@@ -318,9 +318,9 @@ GROUP BY user_id
 def streaming_type_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-state stateful operator (streaming/stateful.py:
     user_type_profiles_gs — per-user row count + event-type histogram
-    in one GroupState tuple). One AvailableNow pass makes the emitted profile equal the
-    batch aggregate, so the composite-state lane is fully
-    oracle-checked; top_type tie-breaks on the smallest type string on
+    in one GroupState tuple). One AvailableNow pass makes the emitted
+    profile equal the batch aggregate, so the composite-state lane is
+    fully oracle-checked; top_type tie-breaks on the smallest type string on
     both engines. All columns integer/string — hash-exact."""
     from ..streaming.stateful import user_type_profiles_gs
 

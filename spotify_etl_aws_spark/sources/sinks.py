@@ -6,10 +6,10 @@ collapses both hops into a single distributed write — the same call
 works for ``/local`` and ``s3a://`` destinations.
 
 The reference's MotherDuck CTAS (bronze.py:294-318) maps to
-``saveAsTable`` against the session catalog (``save_bucketed``); its dbt post-hook gold
-export — which re-runs after **every** core model, 4x
-(dbt_project.yml:41) — becomes a single explicit ``write_parquet`` at
-the end of the gold build.
+``saveAsTable`` against the session catalog (``save_bucketed``); its
+dbt post-hook gold export — which re-runs after **every** core model,
+4x (dbt_project.yml:41) — becomes a single explicit ``write_parquet``
+at the end of the gold build.
 
 File sizing: an unpartitioned medallion write (``write_parquet``, and
 through it the dim upsert and the incremental bronze append) lands one

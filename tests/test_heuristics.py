@@ -1,7 +1,7 @@
 """Curation-heuristics operators (operators/heuristics.py): Gopher-style
 repetition stats, PII scrubbing, deterministic hash sampling, domain
-mixing, UniMax allocation. Planted fixtures with hand-computed expectations; plan pins for
-the map-side-only claims."""
+mixing, UniMax allocation. Planted fixtures with hand-computed
+expectations; plan pins for the map-side-only claims."""
 
 from __future__ import annotations
 

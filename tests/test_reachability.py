@@ -102,7 +102,7 @@ def _names(node: ast.AST, aliases: dict[str, set[str]]) -> set[str]:
     return out
 
 
-def _roots(repo: Path, pkg: str) -> list[Path]:
+def _roots(repo: Path) -> list[Path]:
     return [
         p
         for p in [
@@ -123,7 +123,7 @@ def unreached(repo: Path = REPO, pkg: str = PKG) -> set[str]:
         _module_name(p, repo): (p, ast.parse(p.read_text(), str(p)))
         for p in sorted((repo / pkg).rglob("*.py"))
     }
-    roots = {_module_name(p, repo): ast.parse(p.read_text(), str(p)) for p in _roots(repo, pkg)}
+    roots = {_module_name(p, repo): ast.parse(p.read_text(), str(p)) for p in _roots(repo)}
     plans = {m for m in trees if m.startswith(f"{pkg}.plans.")}
 
     # modules, through imports; a plan module loads its parent packages
@@ -173,7 +173,7 @@ def unreached(repo: Path = REPO, pkg: str = PKG) -> set[str]:
                 reached.add(key)
                 refs |= _names(node, {}) - {node.name}
                 grew = True
-    return (set(trees) - seen - set(roots)) | (set(defs) - reached)
+    return (set(trees) - seen) | (set(defs) - reached)
 
 
 def test_every_package_def_is_reached():

@@ -82,17 +82,17 @@ def test_interleaved_streams_restore_the_session_value():
         b_clamped.set()
         assert a_done.wait(10)
 
-    def run(name):
-        if name == "a":
-            run_available_now(_Stream(session, a_running), "a")
-            a_done.set()
-        else:
-            assert a_clamped.wait(10)
-            run_available_now(_Stream(session, b_running), "b")
+    def run_a():
+        run_available_now(_Stream(session, a_running), "a")
+        a_done.set()
+
+    def run_b():
+        assert a_clamped.wait(10)
+        run_available_now(_Stream(session, b_running), "b")
 
     with ThreadPoolExecutor(2) as pool:
-        for f in [pool.submit(run, "a"), pool.submit(run, "b")]:
-            f.result()
+        for f in [pool.submit(run_a), pool.submit(run_b)]:
+            f.result(timeout=30)
     assert seen == {"a": "32", "b": "32"}
     assert session.conf.get(KEY) == "200"
 
